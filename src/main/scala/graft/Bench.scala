@@ -178,7 +178,7 @@ object Bench {
     * post-clearSessionMemos single-shot cost — so the driver's artifact
     * holds both numbers without a separate SPARK_GRAFT_COLD run. Trial
     * 1 of every query already runs immediately after the per-query
-    * sweep(), so its wall time IS the cold number; recording it adds no
+    * sweep, so its wall time IS the cold number; recording it adds no
     * bench work. The `__cold` entries are additions (never replacing a
     * steady entry) and are EXCLUDED from the headline total, which
     * stays the sum of the same per-query steady minima as r16/r17.
@@ -214,26 +214,20 @@ object Bench {
     def materialize(df: org.apache.spark.sql.DataFrame): Unit =
       df.write.mode("overwrite").format("noop").save()
 
-    // Between-queries hygiene: without it, one query's materialized
-    // state (session memos' localCheckpoint blocks, cached frames)
+    // Between-queries hygiene (SessionMemo.sweep): without it, one
+    // query's materialized state (memo checkpoints, cached frames)
     // accumulates in the block manager across the 62-query pass and
     // squeezes execution memory for every LATER query — the round-9
     // bench showed exactly that signature (front-half median 1.03x
     // baseline, back-half 2.5-5.8x). A long-lived production driver
     // runs job streams the same way, so the sweep is the realistic
     // steady state, not a bench trick.
-    def sweep(): Unit = {
-      Queries.clearSessionMemos()
-      spark.catalog.clearCache()
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = false))
-    }
-
     if (sys.env.getOrElse("SPARK_GRAFT_WARM", "1") != "0") {
       headline.foreach { name =>
         try SparkEntry.queries.get(name).foreach(fn => materialize(fn(spark, "/root/testdata/sf0.001")))
         catch { case _: Throwable => () }
       }
-      sweep()      // warmup-created memos/blocks must not shadow the timed pass
+      SessionMemo.sweep(spark) // warmup-created memos/blocks must not shadow the timed pass
       System.gc()  // drop warmup garbage so timed runs don't pay its GC
     }
 
@@ -272,14 +266,14 @@ object Bench {
     def runSweep(): (Seq[(String, Either[String, Double])], Option[StreamRes], Option[StreamRes]) = {
       val results = headline.flatMap { name =>
         SparkEntry.queries.get(name).toSeq.flatMap { fn =>
-          sweep()
+          SessionMemo.sweep(spark)
           try {
             val times = (1 to trials).map { i =>
-              // trial 1 is already cold from the per-query sweep()
+              // trial 1 is already cold from the per-query sweep
               // above — re-sweeping there would just slow cold anchor
               // runs (ADVICE r16); later trials sweep so each one
               // rebuilds memoized state from scratch
-              if (coldTrials && i > 1) sweep()
+              if (coldTrials && i > 1) SessionMemo.sweep(spark)
               val t0 = System.nanoTime()
               materialize(fn(spark, sfDir))
               (System.nanoTime() - t0) / 1e9
@@ -301,7 +295,7 @@ object Bench {
       // do — one size can't distinguish fixed micro-batch latency from
       // per-row cost; two sizes separate the intercept from the slope.
       def streamAt(dir: String): Option[StreamRes] = {
-        sweep()
+        SessionMemo.sweep(spark)
         try Some(streamingSection(spark, dir))
         catch { case _: Throwable => None }
       }
@@ -351,43 +345,6 @@ object Bench {
     // runs (BENCH_r10.json lost the headline total and first 8
     // queries), so the full record also lands in bench_runs/.
     val durable = durableWrite(s"bench_${sfName}_r$round$suffix", line)
-    // The driver parses a JSON line out of the LAST 2000 CHARS of
-    // stdout — measured, not guessed: every BENCH_r*.json tail is
-    // exactly 2000 chars, and r10's tail contains the canonical line's
-    // END but not its start, with parsed:null (r10–r13 all failed that
-    // way once the line outgrew the window). A complete JSON object
-    // must therefore sit entirely inside the final 2000 chars, sbt's
-    // ~80-char "[success] ..." trailer included. 121 query names alone
-    // are ~2000 chars, so VERDICT r17 item 2's "inline the full
-    // per-query map" cannot fit; instead the summary line inlines the
-    // highest-value subset under a hard budget: first the ColdDual
-    // steady+__cold pairs (VERDICT item 3 — both numbers land in the
-    // driver-parsed artifact), then the remaining queries by
-    // descending steady time (the ones that move the total and the
-    // 8-core scaling comparison). The durable side file and the full
-    // canonical line above carry the complete map; additions only —
-    // every inlined entry keeps its canonical name and value.
-    val errsShort = err.map { case (k, m) => s""""$k":"$m"""" }.mkString("{", ",", "}")
-    val steadyN = ok.count(!_._1.endsWith("__cold"))
-    val okMap = ok.toMap
-    val inlineOrder: Seq[(String, Double)] = {
-      val pairs = ColdDual.toSeq.sorted.flatMap(n =>
-        Seq(n, n + "__cold").flatMap(k => okMap.get(k).map(k -> _)))
-      val rest = ok.filterNot { case (k, _) =>
-        ColdDual(k) || k.endsWith("__cold") }.sortBy(-_._2)
-      pairs ++ rest
-    }
-    val qsBudget = 1500 // chars for the map body; total line stays < ~1900
-    val qsShort = {
-      val sb = new StringBuilder
-      inlineOrder.foreach { case (k, v) =>
-        val e = f""""$k":$v%.3f"""
-        if (sb.length + e.length + 1 <= qsBudget) {
-          if (sb.nonEmpty) sb.append(','); sb.append(e): Unit
-        }
-      }
-      "{" + sb.result() + "}"
-    }
     // silent-codegen-fallback gate (VERDICT r14 item 1): any janino
     // compile failure during the run surfaces as a COUNT in the
     // summary line (and its messages land durably) instead of hiding
@@ -395,13 +352,65 @@ object Bench {
     val cgErrs = CodegenGuard.drain()
     if (cgErrs.nonEmpty)
       durableWrite(s"codegen_errors_${sfName}_r$round$suffix", cgErrs.mkString("\n")): Unit
-    println(
-      s"""{"metric":"headline_total","value":${f"${ok.collect { case (k, v) if !k.endsWith("__cold") => v }.sum}%.3f"},"unit":"sec",""" +
-      s""""sweeps":$sweeps,"queries_n":$steadyN,"errors_n":${err.size},""" +
-      s""""queries":$qsShort,"errors":$errsShort,"codegen_errors":${cgErrs.size},""" +
-      s""""per_query_in":"${durable.map(_.toString).getOrElse("(durable write failed)")}",""" +
-      s""""sf":"$sfDir"}""")
+    println(summaryLine(ok, err, cgErrs.size,
+      durable.map(_.toString).getOrElse("(durable write failed)"), sfDir, sweeps))
     spark.stop()
+  }
+
+  /** The bench record is parsed from the LAST 2000 CHARS of
+    * stdout (every BENCH_r*.json tail is exactly 2000 chars; r10–r13
+    * lost the line's start once it outgrew the window), sbt's ~80-char
+    * "[success] ..." trailer included, so the summary line is held to
+    * SummaryBudget chars. 121 query names alone are ~2000 chars, so it
+    * inlines the highest-value subset of both maps. The error map goes
+    * first, capped at half of what the fixed fields leave (messages cut
+    * to ErrMsgChars; `errors_n` keeps the full count). The per-query map
+    * takes the rest: the ColdDual steady+__cold pairs first, then the
+    * other queries by descending steady time. The durable side file and
+    * the canonical line carry the complete maps.
+    */
+  private[graft] val SummaryBudget = 1900
+  private val ErrMsgChars = 80
+
+  private[graft] def summaryLine(ok: Seq[(String, Double)], err: Seq[(String, String)],
+      codegenErrors: Int, perQueryIn: String, sfDir: String, sweeps: Int): String = {
+    val total = ok.collect { case (k, v) if !k.endsWith("__cold") => v }.sum
+    val steadyN = ok.count(!_._1.endsWith("__cold"))
+    def line(qs: String, errs: String): String =
+      s"""{"metric":"headline_total","value":${f"$total%.3f"},"unit":"sec",""" +
+      s""""sweeps":$sweeps,"queries_n":$steadyN,"errors_n":${err.size},""" +
+      s""""queries":{$qs},"errors":{$errs},"codegen_errors":$codegenErrors,""" +
+      s""""per_query_in":"${jsonEscape(perQueryIn)}","sf":"${jsonEscape(sfDir)}"}"""
+    val free = SummaryBudget - line("", "").length
+    val errs = fitEntries(err.map { case (k, m) =>
+      s""""${jsonEscape(k)}":"${jsonEscape(m.take(ErrMsgChars))}"""" }, free / 2)
+    val okMap = ok.toMap
+    val pairs = ColdDual.toSeq.sorted.flatMap(n =>
+      Seq(n, n + "__cold").flatMap(k => okMap.get(k).map(k -> _)))
+    val rest = ok.filterNot { case (k, _) => ColdDual(k) || k.endsWith("__cold") }.sortBy(-_._2)
+    val qs = fitEntries((pairs ++ rest).map { case (k, v) => f""""$k":$v%.3f""" },
+      free - errs.length)
+    line(qs, errs)
+  }
+
+  /** Comma-joins `entries` in order, skipping any entry that would push
+    * the joined body past `budget` chars.
+    */
+  private def fitEntries(entries: Seq[String], budget: Int): String = {
+    val sb = new StringBuilder
+    entries.foreach { e =>
+      if (sb.length + e.length + 1 <= budget) {
+        if (sb.nonEmpty) sb.append(','); sb.append(e): Unit
+      }
+    }
+    sb.result()
+  }
+
+  private def jsonEscape(v: String): String = v.flatMap {
+    case '"' => "\\\""
+    case '\\' => "\\\\"
+    case c if c < ' ' => "\\u%04x".format(c.toInt)
+    case c => c.toString
   }
 
   /** One streaming-tape result: tape row count, tape dir, per-op wall
@@ -412,7 +421,8 @@ object Bench {
   private def json(ok: Seq[(String, Double)], err: Seq[(String, String)],
       st: Option[StreamRes], stSmall: Option[StreamRes], sfDir: String, sweeps: Int): String = {
     val qs = ok.map { case (k, v) => f""""$k":$v%.3f""" }.mkString("{", ",", "}")
-    val errs = err.map { case (k, m) => s""""$k":"$m"""" }.mkString("{", ",", "}")
+    val errs = err.map { case (k, m) => s""""${jsonEscape(k)}":"${jsonEscape(m)}"""" }
+      .mkString("{", ",", "}")
     // headline total = steady entries only: the __cold dual reports are
     // additions and must not move the round-over-round total
     val total = ok.collect { case (k, v) if !k.endsWith("__cold") => v }.sum

@@ -7,9 +7,10 @@ import org.apache.spark.sql.SparkSession
   * Defaults chosen for correctness-portability (UTC session time zone —
   * all window arithmetic is epoch-aligned, see SURVEY.md §3) and for
   * scale (AQE with partition coalescing + skew-join handling). On a real
-  * cluster `shufflePartitions` should be ~2-3× total cores; the local
-  * harness pins it to the local core count so tiny test data doesn't
-  * fragment into hundreds of empty tasks.
+  * cluster `shufflePartitions` should be ~2-3× total cores. The local
+  * defaults are `local[N]` with N = `SPARK_GRAFT_CPUS` (32 when unset)
+  * and 32 shuffle partitions, whatever the core count; the 32 is also
+  * the state-partition count of every stateful streaming operator.
   */
 object GraftSession {
 

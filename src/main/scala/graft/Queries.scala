@@ -199,82 +199,17 @@ object Queries
              )"""
 
 
-  /** Simhash pair mining + the iterative CC driver loop is the most
-    * expensive dedup stage and feeds BOTH q_dedup_clusters and
-    * q_dedup_survivors — a session-scoped cache runs it once per
-    * (session, dir). The result is already materialized (the CC loop
-    * localCheckpoints its state), so re-reads are leaf scans.
+  /** Drop every session memo that holds block-manager storage — the
+    * between-queries hygiene hook; see [[SessionMemo]] for the lifecycle.
     */
-  private[graft] val ccCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
+  def clearSessionMemos(): Unit = SessionMemo.clear()
 
 
-  /** Drop every session-scoped DataFrame memo and free its checkpointed
-    * blocks — the between-queries hygiene hook Bench calls so one
-    * query's materialized state can't squeeze the next query's
-    * execution memory. The memos rebuild lazily on next use, so this is
-    * always safe; it only trades recompute for memory headroom. (The
-    * bloom-bytes memo in DedupFns stays: it holds plain byte arrays,
-    * not block-manager storage.)
-    */
-  def clearSessionMemos(): Unit = {
-    (pairsCache.values ++ ccCache.values ++ sliceCache.values ++
-        lpaCache.values.flatMap(p => Seq(p._1, p._2)) ++
-        symCache.values ++ degCache.values ++ spanCache.values ++
-        lmCache.values ++ bm25Cache.values ++
-        bpeCache.values.flatMap(p => p._1 ++ p._2))
-      .foreach(org.apache.spark.sql.GraftBridge.freeLocalCheckpoint)
-    pairsCache.clear()
-    ccCache.clear()
-    sliceCache.clear()
-    lpaCache.clear()
-    symCache.clear()
-    degCache.clear()
-    spanCache.clear()
-    lmCache.clear()
-    bm25Cache.clear()
-    bpeCache.clear()
-  }
-
-
-  /** Race-safe frame memo (ADVICE r17): TrieMap.getOrElseUpdate may
-    * evaluate an eagerly-materializing default more than once under
-    * concurrent first access and silently discard the loser — whose
-    * localCheckpoint blocks would then never be registered for
-    * clearSessionMemos to free. Build OUTSIDE the map, publish with
-    * putIfAbsent, and free the losing build's checkpoint immediately.
-    */
-  private[graft] def memoFrame[K](
-      cache: scala.collection.concurrent.TrieMap[K, DataFrame], key: K)(
-      build: => DataFrame): DataFrame =
-    cache.get(key).getOrElse {
-      val built = build
-      cache.putIfAbsent(key, built) match {
-        case None => built
-        case Some(winner) =>
-          org.apache.spark.sql.GraftBridge.freeLocalCheckpoint(built)
-          winner
-      }
-    }
-
-
-  /** Exact near-dup pairs shared by every DERIVED dedup query
-    * (clusters, survivors, degree histogram) — materialized once per
-    * (session, dir) via localCheckpoint so the band self-join runs
-    * once. q_dedup_simhash_pairs itself stays UN-cached: it is the
-    * benched query, and its plan (band equi-join, shared exchange) is
-    * the design artifact under PlanSpec.
-    */
   /** Corpus row counts for auto-sized index parameters (the √n IVF
-    * discipline): one scalar count() per (session, dir, table), then a
-    * plain long — no block-manager storage, so clearSessionMemos leaves
-    * it alone (the testdata dir never changes mid-session).
+    * discipline): one scalar count() per (session, dir, table).
     */
-  private[graft] val countCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String, String), Long]
-
   private[graft] def tableCount(s: SparkSession, dir: String, table: String): Long =
-    countCache.getOrElseUpdate((s, dir, table), t(s, dir, table).count())
+    SessionMemo.scalar("count.table", Some(s), (dir, table))(t(s, dir, table).count())
 
 
   /** TokenMat GRADUATION flag (VERDICT r14 item 8): when
@@ -356,17 +291,27 @@ object Queries
     math.max(64, math.ceil(math.sqrt(n.toDouble)).toInt)
 
 
-  private[graft] val pairsCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
-
+  /** Exact near-dup pairs shared by every DERIVED dedup query
+    * (clusters, survivors, degree histogram) — materialized once per
+    * (session, dir) via localCheckpoint so the band self-join runs
+    * once. q_dedup_simhash_pairs itself stays UN-cached: it is the
+    * benched query, and its plan (band equi-join, shared exchange) is
+    * the design artifact under PlanSpec.
+    */
   private[graft] def simhashPairs(s: SparkSession, dir: String): DataFrame =
-    memoFrame(pairsCache, (s, dir))(
+    SessionMemo.frame("pairs", s, dir)(
       DedupFns.simhashNearDupPairs(t(s, dir, "documents"), "doc_id", "text", maxHamming = 3)
         .localCheckpoint(true))
 
 
+  /** Simhash pair mining + the iterative connected-components loop is
+    * the most expensive dedup stage and feeds BOTH q_dedup_clusters and
+    * q_dedup_survivors — memoized per (session, dir) so it runs once.
+    * The result is already materialized (the CC loop localCheckpoints
+    * its state), so re-reads are leaf scans.
+    */
   private[graft] def simhashClusters(s: SparkSession, dir: String): DataFrame =
-    memoFrame(ccCache, (s, dir))(
+    SessionMemo.frame("cc", s, dir)(
       Relational.connectedComponents(simhashPairs(s, dir), "id_a", "id_b"))
 
 
@@ -377,37 +322,21 @@ object Queries
     * PPR, k-core, BFS, triangles, LPA) consumed its own private
     * union+distinct+checkpoint of the SAME pairs — ~0.5-1.1 s of
     * identical rebuild per invocation at sf0.1 on top of the memoized
-    * pair mining. One build serves all; clearSessionMemos frees both
-    * frames (and cold anchors still pay the full build, per the
-    * SPARK_GRAFT_COLD sub-anchor convention). simhashPairs emits each
-    * pair once with id_a < id_b, so the symmetric union is distinct
-    * and self-loop-free by construction — the operators' shared-state
-    * contract (Relational.triangleCounts scaladoc).
-    */
-  private[graft] val symCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
-
-  private[graft] val degCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
-
-  /** Shared SPAN STATE for the substring-dedup family (§2 rows
-    * 31p2/31p3/31p4): the islandized duplicated-span frame
-    * (doc_id, __isl, __cnt, __s, __e) — see
-    * `QueriesDedupText.spanIslandState` for the builder and the
-    * equivalence argument. Registered here so clearSessionMemos frees
-    * its checkpoint with the rest of the session state.
-    */
-  private[graft] val spanCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
-
-  /** The symmetric edge list alone — consumers that never touch
+    * pair mining. One build serves all (cold anchors still pay the
+    * full build, per the SPARK_GRAFT_COLD sub-anchor convention).
+    * simhashPairs emits each pair once with id_a < id_b, so the
+    * symmetric union is distinct and self-loop-free by construction —
+    * the operators' shared-state contract (Relational.triangleCounts
+    * scaladoc).
+    *
+    * The symmetric edge list alone — consumers that never touch
     * degrees (k-core, BFS: they probe the list map-side) must not pay
     * the degree aggregation's build on a cold run, so the two frames
     * memoize independently (the sf10 cold sweep charges each query
     * its own first-touch build).
     */
   private[graft] def graphSym(s: SparkSession, dir: String): DataFrame =
-    memoFrame(symCache, (s, dir)) {
+    SessionMemo.frame("sym", s, dir) {
       val p = simhashPairs(s, dir)
       p.select(col("id_a").as("src"), col("id_b").as("dst"))
         .union(p.select(col("id_b").as("src"), col("id_a").as("dst")))
@@ -417,7 +346,7 @@ object Queries
 
   private[graft] def graphEdges(s: SparkSession, dir: String): (DataFrame, DataFrame) = {
     val sym = graphSym(s, dir)
-    val deg = memoFrame(degCache, (s, dir))(
+    val deg = SessionMemo.frame("deg", s, dir)(
       sym.groupBy(col("src").as("id")).agg(count(lit(1)).as("deg"))
         .localCheckpoint(true))
     (sym, deg)
@@ -425,24 +354,19 @@ object Queries
 
 
   /** LPA (labels, symmetric edge list) over the near-dup graph,
-    * memoized per (session, dir) like the CC state: the loop's
-    * checkpointed frames (final labels + edge list) previously leaked
-    * block-manager storage on repeated invocations outside Bench's
-    * sweep — routing them through a clearSessionMemos-covered cache
-    * gives them the same release path as every other session memo
-    * (ADVICE r14). Labels are checkpointed eagerly (referenced three
-    * times by the modularity accounting).
+    * memoized per (session, dir) like the CC state, so the loop's
+    * checkpointed labels share the memo release path (ADVICE r14).
+    * Labels are checkpointed eagerly (referenced three times by the
+    * modularity accounting). The edge list is the graphSym frame, which
+    * the "sym" entry owns, so only the labels are pinned here.
     */
-  private[graft] val lpaCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), (DataFrame, DataFrame)]
-
   private[graft] def lpaState(s: SparkSession, dir: String): (DataFrame, DataFrame) =
-    lpaCache.getOrElseUpdate((s, dir), {
+    SessionMemo.frames("lpa", s, dir) {
       val (labels0, edges) =
         Relational.labelPropagationWithEdges(simhashPairs(s, dir), "id_a", "id_b", iters = 3,
           prebuiltEdges = Some(graphSym(s, dir)))
       (labels0.localCheckpoint(true), edges)
-    })
+    }(st => Seq(st._1))
 
 
   // ---- Deterministic 1/16 md5 slice: the decade-up parity valve ----
@@ -472,7 +396,7 @@ object Queries
     * rule — Spark from a (cached) metadata count-star, the oracle
     * from a scalar subquery — the dynamic-parameter oracle rule every
     * auto-sized query already follows. (Counts come from the same
-    * countCache the √n IVF auto-sizing uses, above.)
+    * tableCount memo the √n IVF auto-sizing uses, above.)
     */
   private[graft] def slicePredSql(idCol: String, table: String, threshold: Long): String =
     s"""(CASE WHEN (SELECT count(*) FROM $table) >= $threshold
@@ -498,24 +422,21 @@ object Queries
     * their full-corpus originals. The slice is 1/16 of the corpus, so
     * the materialization is noise next to the pair joins above it.
     */
-  private[graft] val sliceCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
-
   private[graft] def slicedDocs(s: SparkSession, dir: String): DataFrame =
-    memoFrame(sliceCache, (s, dir))(
+    SessionMemo.frame("slice", s, dir)(
       t(s, dir, "documents")
         .filter(sliceCondAt(s, dir, "documents", 100000L)(col("doc_id")))
         .localCheckpoint(true))
 
 
   private[graft] def simhashPairsSliced(s: SparkSession, dir: String): DataFrame =
-    memoFrame(pairsCache, (s, dir + "#slice16"))(
+    SessionMemo.frame("pairs", s, dir + "#slice16")(
       DedupFns.simhashNearDupPairs(slicedDocs(s, dir), "doc_id", "text", maxHamming = 3)
         .localCheckpoint(true))
 
 
   private[graft] def simhashClustersSliced(s: SparkSession, dir: String): DataFrame =
-    memoFrame(ccCache, (s, dir + "#slice16"))(
+    SessionMemo.frame("cc", s, dir + "#slice16")(
       Relational.connectedComponents(simhashPairsSliced(s, dir), "id_a", "id_b"))
 
 
@@ -823,20 +744,18 @@ object Queries
     * encode alone was 32 s at sf10, much of it the learn loop) and
     * left ~11 localCheckpoint frames unfreed until sweep hygiene — the
     * exact block-manager-leak class lpaState closed for LPA. The memo
-    * runs the loop once per (session, dir, rounds) and clearSessionMemos
-    * frees EVERY frame. No frame is freeable before release: the merge
+    * runs the loop once per (session, dir, rounds) and pins EVERY frame
+    * it checkpoints. No frame is freeable before release: the merge
     * frames are 1-row each, and every per-round vocab (vocab-bounded,
     * never corpus-sized) is live state — q_bpe_apply's compression
     * curve reads all 11 of them, so "superseded" only happens when the
     * memo itself is dropped. Round16OpsSpec pins memo-read ==
     * cold-rebuild equality.
     */
-  private[graft] val bpeCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String, Int), (Vector[DataFrame], Vector[DataFrame])]
-
   private[graft] def bpeRounds(s: SparkSession, dir: String,
       rounds: Int): (Vector[DataFrame], Vector[DataFrame]) =
-    bpeCache.getOrElseUpdate((s, dir, rounds), bpeRoundsCold(s, dir, rounds))
+    SessionMemo.frames("bpe", s, (dir, rounds))(bpeRoundsCold(s, dir, rounds))(
+      st => st._1 ++ st._2)
 
 
   private[graft] def bpeRoundsCold(s: SparkSession, dir: String,
@@ -953,8 +872,8 @@ object Queries
     * kernel (bigram explode + (x,y) count window + vocab join + per-doc
     * aggregate) per invocation. The memoized frame is doc-sized (three
     * longs per doc); consumers derive raw scores / ntile tertiles /
-    * histogram cuts from it. Keyed (session, dir) and freed by
-    * clearSessionMemos; cold cost carried by the SPARK_GRAFT_COLD
+    * histogram cuts from it. Keyed (session, dir) in [[SessionMemo]];
+    * cold cost carried by the SPARK_GRAFT_COLD
     * sub-anchor convention. TokenMat note (VERDICT r17 item 1): the
     * memo serves ONLY flag-off sessions. When spark.graft.tokenmat=1
     * the memo is skipped entirely, so every call re-runs
@@ -964,12 +883,9 @@ object Queries
     * a flag flip mid-session can never serve tokens built under the
     * earlier flag state.
     */
-  private[graft] val lmCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
-
   private[graft] def bigramLmState(s: SparkSession, dir: String): DataFrame =
     if (tokenMatTable(s, dir).isDefined) bigramLmPerDoc(s, dir)
-    else memoFrame(lmCache, (s, dir))(bigramLmPerDoc(s, dir).localCheckpoint(true))
+    else SessionMemo.frame("lm", s, dir)(bigramLmPerDoc(s, dir).localCheckpoint(true))
 
 
   /** bigram-LM kernel from an arbitrary (doc_id, __toks) frame — the
@@ -1096,16 +1012,13 @@ object Queries
     * spanIslandState discipline): q_bm25 and q_rrf_fusion's lexical
     * head each re-ran the two bounded token passes per invocation. The
     * memoized frame is ≤ docs-sized (only query-term hits). Same
-    * lifecycle as lmCache above, including the flag-on memo skip
+    * lifecycle as bigramLmState above, including the flag-on memo skip
     * (VERDICT r17 item 1): with spark.graft.tokenmat=1 every call goes
     * through tokenMatTable's absent/stale checks instead of the memo.
     */
-  private[graft] val bm25Cache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
-
   private[graft] def bm25State(s: SparkSession, dir: String): DataFrame =
     if (tokenMatTable(s, dir).isDefined) bm25Scores(s, dir)
-    else memoFrame(bm25Cache, (s, dir))(bm25Scores(s, dir).localCheckpoint(true))
+    else SessionMemo.frame("bm25", s, dir)(bm25Scores(s, dir).localCheckpoint(true))
 
 
   /** The bm25 pipeline from an arbitrary (doc_id, __toks) frame — the

@@ -2277,8 +2277,8 @@ private[graft] trait QueriesDedupText { this: Queries.type =>
     *     (DedupFns.spanCoverageFromIslands — the second half of the
     *     spanCoverage composition the streaming twin still runs whole);
     *   - the excision island array = collect_list(struct(__s, __e)).
-    * So ONE build serves all three, memoized per (session, dir) and
-    * freed by clearSessionMemos (Bench sweeps between queries, so each
+    * So ONE build serves all three, memoized per (session, dir) in
+    * SessionMemo (Bench sweeps between queries, so each
     * query's first trial pays the full build; cold anchors carry it per
     * the SPARK_GRAFT_COLD convention). The frame is island-sized
     * (docs × dup-islands + one null row per doc ≪ spans), so the
@@ -2324,7 +2324,7 @@ private[graft] trait QueriesDedupText { this: Queries.type =>
   }
 
   private[graft] def spanIslandState(s: SparkSession, dir: String): DataFrame =
-    Queries.memoFrame(Queries.spanCache, (s, dir))(
+    SessionMemo.frame("span", s, dir)(
       DedupFns.spanIslandize(spanDupFlags(s, dir)).localCheckpoint(true))
 
   /** Duplicated-substring RUN detection (the Lee et al. 2022

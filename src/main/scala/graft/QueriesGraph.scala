@@ -219,9 +219,8 @@ private[graft] trait QueriesGraph { this: Queries.type =>
       // node-sized result of the 3-round loop, referenced three times
       // below (degree join + both endpoint attaches) — memoized (and
       // checkpointed) once per (session, dir) via lpaState, so repeated
-      // invocations neither re-run the loop nor leak checkpoint blocks:
-      // clearSessionMemos frees labels AND the edge list like every
-      // session memo. Degrees read the loop's own checkpointed
+      // invocations neither re-run the loop nor leak checkpoint blocks
+      // (see SessionMemo). Degrees read the loop's own checkpointed
       // symmetric edge list instead of re-deriving the union+distinct
       // exchange.
       val (labels, edges) = lpaState(s, dir)

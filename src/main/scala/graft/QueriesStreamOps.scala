@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 import graft.operators.{Joins, Keyed, Relational, Windows}
-import graft.functions.{DedupFns, Fence, Multimodal, TextFns, VectorFns}
+import graft.functions.{DedupFns, Fence, Multimodal, TextFns, VectorFns, Width}
 
 /** The reference STREAM SURFACE + window/join family (SURVEY §2 rows 1-18, 2k, 2k2): StreamExt ops, tumbling/hopping/lag/session windows, stream joins (interval, enrichment, salted, range, overlap, as-of), stocks/tpipe examples, CDC apply, sessionize.
   *
@@ -783,10 +783,8 @@ private[graft] trait QueriesStreamOps { this: Queries.type =>
         (col("value").cast(dec) * 100).cast("long").as("__cents"))
         // explicit count: the hourly frame is byte-tiny but the gap
         // explode amplifies rows output-sized, so AQE's byte-based
-        // coalescing would run the whole explode in 1 task (the
-        // q_triangles wedge-join pattern); a user numPartitions is
-        // exempt from coalescing and scales with the cluster
-        .repartition(3 * s.sparkContext.defaultParallelism, col("user_id"))
+        // coalescing would run the whole explode in 1 task (see Width)
+        .repartition(Width.computeDense(s), col("user_id"))
       val hourly = ev.groupBy("user_id", "h")
         .agg(count(lit(1)).as("n_events"), sum(col("__cents")).as("sum_cents"))
         .withColumn("__nh", lead(col("h"), 1).over(

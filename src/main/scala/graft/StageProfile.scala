@@ -60,9 +60,7 @@ object StageProfile {
     // run a query name twice to see its warm profile second).
     val queryArgs = (query +: args.drop(1).filterNot(_.startsWith("/"))).distinct
     queryArgs.foreach { qname =>
-      Queries.clearSessionMemos()
-      spark.catalog.clearCache()
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = false))
+      SessionMemo.sweep(spark)
       stages.clear()
       val fn = SparkEntry.queries(qname)
       val t0 = System.nanoTime()

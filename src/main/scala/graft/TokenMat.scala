@@ -92,11 +92,6 @@ object TokenMat {
 
     def materializeNoop(df: DataFrame): Unit =
       df.write.mode("overwrite").format("noop").save()
-    def sweep(): Unit = {
-      Queries.clearSessionMemos()
-      spark.catalog.clearCache()
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = false))
-    }
     def time(mk: () => DataFrame): Double =
       (1 to trials).map { _ =>
         val t0 = System.nanoTime()
@@ -124,11 +119,11 @@ object TokenMat {
       val sigV = signature(mkVar())
       val sigF = signature(mkFlag())
       val parity = sigO == sigV && sigO == sigF
-      sweep()
+      SessionMemo.sweep(spark)
       val origSec = time(() => mkOrig())
-      sweep()
+      SessionMemo.sweep(spark)
       val varSec = time(mkVar)
-      sweep()
+      SessionMemo.sweep(spark)
       val flagSec = time(() => mkFlag())
       val line = f"""{"q":"$name","parity":$parity,"orig_sec":$origSec%.3f,""" +
         f""""mat_sec":$varSec%.3f,"flag_sec":$flagSec%.3f,""" +

@@ -350,10 +350,8 @@ object DedupFns {
     * sizing count + treeAggregate build run once; repeat calls are a
     * map lookup). Entries are small (the filter is ~1.2 bytes/element
     * at fpp 0.01) and keys are few (one per probe set), so no eviction.
-    */
-  private val bloomMemo = new java.util.concurrent.ConcurrentHashMap[String, Array[Byte]]()
-
-  /** The caller's `key` must name the probe DATA identity (dir + probe
+    *
+    * The caller's `key` must name the probe DATA identity (dir + probe
     * definition + gram width) and must change whenever the probe data
     * changes (e.g. a test regenerating parquet at the same path within
     * one JVM must vary the key) — a stale filter means false negatives,
@@ -364,8 +362,7 @@ object DedupFns {
     */
   def gramBloomBytesCached(key: String, grams: => DataFrame, gramCol: String,
       fpp: Double = 0.01): Array[Byte] =
-    bloomMemo.computeIfAbsent(s"$key@fpp=$fpp",
-      _ => gramBloomBytes(grams, gramCol, fpp))
+    graft.SessionMemo.scalar("bloom", None, s"$key@fpp=$fpp")(gramBloomBytes(grams, gramCol, fpp))
 
   /** Exact n-gram Jaccard over candidate pairs.
     *
@@ -563,10 +560,8 @@ object DedupFns {
     // COMPUTE-dense — one array_intersect per pair — so AQE's
     // byte-based coalescing squeezed it to 2 tasks (3.0 s of the
     // 3.6 s sf0.1 bench time). The docs sides broadcast, so the pair
-    // frame DRIVES the stage; a user numPartitions is exempt from
-    // coalescing and scales with the cluster, never a local constant
-    // (the q_triangles wedge-join precedent).
-    val rescoreParts = 3 * df.sparkSession.sparkContext.defaultParallelism
+    // frame DRIVES the stage (see Width).
+    val rescoreParts = Width.computeDense(df.sparkSession)
     // sizes rode through the aggregate, so the union is arithmetic
     // (|x|+|y|−inter) and array_intersect evaluates ONCE per pair
     cands.repartition(rescoreParts, col("id_a"))

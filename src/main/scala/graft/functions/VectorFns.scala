@@ -145,7 +145,18 @@ object VectorFns {
   def autoCentroidCount(n: Long): Int =
     math.max(1L, math.ceil(math.sqrt(n.toDouble)).toLong).toInt
 
-  private def memoCount(df: DataFrame): Long = CountMemo.of(df)
+  /** Row count of `df`, memoized per session and analyzed CANONICALIZED
+    * plan (structural equality, so every read of the same table — or
+    * the same derived frame — hits the same entry). Auto-sizing rules
+    * (autoPlanes / autoCentroidCount, Relational.autoPrefixChars) need
+    * n at DataFrame-CONSTRUCTION time; an uncached eager count() would
+    * bill a full input scan to every plan-only path — Explain,
+    * PlanSpec's optimizedPlan, repeated query construction — once per
+    * call. Same discipline as Queries.tableCount.
+    */
+  private[graft] def memoCount(df: DataFrame): Long =
+    graft.SessionMemo.scalar("count.plan", Some(df.sparkSession),
+      df.queryExecution.analyzed.canonicalized)(df.count())
 
   def ivfCentroids(corpus: DataFrame, idCol: String, vecCol: String, k: Int): Seq[Seq[Long]] =
     corpus

@@ -44,7 +44,7 @@ object Relational {
     * default (0 = auto) turns the knob itself from the input count —
     * smallest width keeping expected bucket size ≤ 10⁶ rows. Auto
     * sizing runs ONE count action over `df` at construction time,
-    * memoized per canonicalized plan (CountMemo) so repeated
+    * memoized per canonicalized plan (VectorFns.memoCount) so repeated
     * construction and plan-only paths don't re-scan; when the input has
     * expensive upstream transforms, cache it first or pass an explicit
     * width. The
@@ -56,7 +56,7 @@ object Relational {
     require(prefixChars >= 0, s"prefixChars must be >= 0 (0 = auto), got $prefixChars")
     val chars =
       if (prefixChars > 0) prefixChars
-      else autoPrefixChars(graft.functions.CountMemo.of(df))
+      else autoPrefixChars(graft.functions.VectorFns.memoCount(df))
     val h = md5(col(idCol).cast("string"))
     val base = df.select(col(idCol), h.as("__h"), substring(h, 1, chars).as("__b"))
     // the offsets window spans only the 16^chars bucket-count rows
@@ -393,14 +393,11 @@ object Relational {
     // byte-based coalescing (which cannot see join amplification)
     // collapses it to 1 post-shuffle partition and the entire
     // wedge+close pipeline runs in ONE task (measured: 4.9 s of the
-    // 6.6 s sf0.1 bench time serial on 32 cores). A user-specified
-    // numPartitions is exempt from AQE coalescing; 3× cluster
-    // parallelism keeps every core fed with schedulable granularity,
-    // scales with the cluster (never a local constant), and at data
+    // 6.6 s sf0.1 bench time serial on 32 cores), hence Width; at data
     // sizes where broadcast stops applying the hash-on-src exchange is
     // exactly the distribution the wedge self-join requires, so no
     // second exchange appears.
-    val wedgeParts = 3 * pairs.sparkSession.sparkContext.defaultParallelism
+    val wedgeParts = graft.functions.Width.computeDense(pairs.sparkSession)
     val oriented = e.select(
       when(aFirst, col("a")).otherwise(col("b")).as("src"),
       when(aFirst, col("b")).otherwise(col("a")).as("dst"),

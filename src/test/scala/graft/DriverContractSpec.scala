@@ -78,6 +78,37 @@ class DriverContractSpec extends AnyFunSuite {
     assert(badMarkers.isEmpty, s"private-endpoint/credential markers:\n${badMarkers.mkString("\n")}")
   }
 
+  test("bench summary line: 10 injected long errors keep it inside the parse window and valid JSON") {
+    val ok = Bench.Headline.zipWithIndex.map { case (n, i) => n -> (0.5 + i) } ++
+      Bench.ColdDual.toSeq.map(n => s"${n}__cold" -> 7.0)
+    val err = (1 to 10).map(i =>
+      s"q_injected_$i" -> ("java.lang.IllegalStateException: \"quoted\" \\ detail\n" * 20))
+    val line = Bench.summaryLine(ok, err, 0, "bench_runs/bench_sf0.1_r99.json", "sf0.1", 2)
+    assert(line.length <= Bench.SummaryBudget && line.length < 2000, s"${line.length} chars")
+    val tree = new com.fasterxml.jackson.databind.ObjectMapper()
+      .enable(com.fasterxml.jackson.databind.DeserializationFeature.FAIL_ON_TRAILING_TOKENS)
+      .readTree(line)
+    assert(tree.get("errors_n").asInt == 10)
+    assert(tree.get("queries_n").asInt == Bench.Headline.size)
+    assert(tree.get("errors").size > 0, "some errors must be inlined")
+    assert(tree.get("queries").size > 0, "the error map must leave room for queries")
+  }
+
+  test("one memo registry: no session-keyed TrieMap/ConcurrentHashMap outside SessionMemo.scala") {
+    // a memo map of its own escapes SessionMemo's race-safe publish and
+    // its single clear path (the hand-kept free list it replaced)
+    implicit val codec: scala.io.Codec = scala.io.Codec.UTF8
+    val decl = "(TrieMap|ConcurrentHashMap)\\s*(\\.\\s*empty\\s*)?\\[[^\\]]*SparkSession".r
+    val main = sourceFiles.filter(_.getPath.startsWith(s"src${java.io.File.separator}main"))
+    val hits = main.filter { f =>
+      val src = scala.io.Source.fromFile(f)
+      try decl.findFirstIn(src.mkString).isDefined finally src.close()
+    }.map(_.getName)
+    assert(hits.contains("SessionMemo.scala"), "the scan no longer recognizes the registry's own map")
+    assert(hits.forall(_ == "SessionMemo.scala"),
+      s"session-keyed memo maps outside SessionMemo: ${hits.filterNot(_ == "SessionMemo.scala")}")
+  }
+
   test("strict plan gate: committed audit snapshot covers every query and all fact multi-scans are adjudicated") {
     // the whole-suite final-plan audit as a REGRESSION gate inside sbt
     // test: the committed snapshot (regenerated each round alongside

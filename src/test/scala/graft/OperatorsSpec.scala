@@ -387,4 +387,14 @@ class OperatorsSpec extends SparkSpecBase {
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(core3Long == core3)
   }
+
+  test("Width.computeDense pins compute-dense shuffles at 3 × defaultParallelism") {
+    val w = graft.functions.Width.computeDense(spark)
+    assert(w == 3 * spark.sparkContext.defaultParallelism)
+    // q_gap_fill's explode input carries exactly that width
+    val widths = Queries.queries("q_gap_fill")(spark, sfDir).queryExecution.analyzed.collect {
+      case r: org.apache.spark.sql.catalyst.plans.logical.RepartitionByExpression => r.numPartitions
+    }
+    assert(widths.contains(w), s"repartition widths: $widths")
+  }
 }
