@@ -20,8 +20,8 @@ scripts/plan_audit_allowlist.json (the per-query adjudication into the
 SURVEY §5 classes: two-role scans, k-pass token pipelines, evaluation
 queries, ANN index-build passes). cartesian/funnel flags alone do not
 gate — they are the bounded-frame classes 1/5 by construction. A new
-multi-scan means either fix the plan (Fence.keepAll /
-keepAllPinned + pre-materialized isnotnull, see SURVEY §5) or
+multi-scan means either fix the plan (Fence.keepAll above the shared
+aggregate or repartition + pre-materialized isnotnull, see SURVEY §5) or
 consciously adjudicate it here.
 """
 import json, os, signal, sys

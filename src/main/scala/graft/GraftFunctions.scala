@@ -213,12 +213,15 @@ object GraftFunctions {
   }
 }
 
-/** Canonical extensions entry point:
-  * `--conf spark.sql.extensions=graft.GraftExtensions` registers the
-  * graft SQL functions in every session of the cluster — no code change
-  * needed on the user side.
+/** Canonical extensions entry point: the graft SQL functions and the
+  * planner strategy of the optimizer fence (graft.functions.Fence).
+  * `GraftSession.builder` applies it; on a cluster,
+  * `--conf spark.sql.extensions=graft.GraftExtensions` does the same
+  * in every session — no code change needed on the user side.
   */
 class GraftExtensions extends (org.apache.spark.sql.SparkSessionExtensions => Unit) {
-  override def apply(ext: org.apache.spark.sql.SparkSessionExtensions): Unit =
+  override def apply(ext: org.apache.spark.sql.SparkSessionExtensions): Unit = {
     GraftFunctions.injectInto(ext)
+    ext.injectPlannerStrategy(_ => graft.functions.FenceStrategy)
+  }
 }

@@ -2,7 +2,8 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** Tuned SparkSession factory for the graft engine.
+/** Tuned SparkSession factory for the graft engine. Every session it
+  * builds carries [[GraftExtensions]].
   *
   * Defaults chosen for correctness-portability (UTC session time zone —
   * all window arithmetic is epoch-aligned, see SURVEY.md §3) and for
@@ -56,15 +57,16 @@ object GraftSession {
       .config("spark.sql.streaming.stateStore.providerClass",
         "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
       .config("spark.ui.enabled", "false")
+      .withExtensions(new GraftExtensions)
   }
 
-  /** Get-or-create a local session with graft defaults and the graft
-    * SQL functions registered (graft_minhash_bands, graft_qdot, …).
+  /** Get-or-create a local session with graft defaults; its
+    * GraftExtensions supply the graft SQL functions (graft_minhash_bands,
+    * graft_qdot, …) and the optimizer fence's planner strategy.
     */
   def local(appName: String = "graft"): SparkSession = {
     val spark = builder(appName).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    GraftFunctions.register(spark)
     // AFTER session startup: Spark re-initializes log4j2 during init,
     // which would drop a pre-installed appender — see CodegenGuard
     CodegenGuard.install()

@@ -277,7 +277,7 @@ object Queries
     tokenMatTable(s, dir)
       .map(_.select(col("doc_id"), col("__toks")))
       .getOrElse(Fence.guard(t(s, dir, "documents")
-        .select(col("doc_id"), TextFns.tokensFast(col("text")).as("__toks"), Fence.col)))
+        .select(col("doc_id"), TextFns.tokensFast(col("text")).as("__toks"))))
 
 
   /** Auto-sized IVF centroid count for the all-to-all screens:
@@ -761,7 +761,7 @@ object Queries
   private[graft] def bpeRoundsCold(s: SparkSession, dir: String,
       rounds: Int): (Vector[DataFrame], Vector[DataFrame]) = {
       val un = Fence.guard(t(s, dir, "documents")
-          .select(TextFns.tokensFast(col("text")).as("__tk"), Fence.col))
+          .select(TextFns.tokensFast(col("text")).as("__tk")))
         .select(explode(col("__tk")).as("tok"))
       var vocab = un.groupBy("tok").agg(count(lit(1)).as("f"))
         .select(expr(
@@ -1109,7 +1109,7 @@ object Queries
       // would substitute the kernel into the filter — kmeansStep's
       // precedent); the filter itself mirrors the oracle's null screen
       val e = Fence.guard(emb
-          .select(col("vec_id"), VectorFns.quantizeFast(col("embedding")).as("qv"), Fence.col))
+          .select(col("vec_id"), VectorFns.quantizeFast(col("embedding")).as("qv")))
         .filter(col("qv").isNotNull)
       val d = docs.select(col("doc_id"), col("source"))
       val cents = e.join(d, e("vec_id") === d("doc_id"))

@@ -54,7 +54,7 @@ private[graft] trait QueriesDedupText { this: Queries.type =>
       // substituted into the scan and re-tokenize — see functions.Fence)
       Fence.guard(
           t(s, dir, "documents")
-            .select(col("doc_id"), TextFns.tokensFast(col("text")).as("__toks"), Fence.col))
+            .select(col("doc_id"), TextFns.tokensFast(col("text")).as("__toks")))
         .filter(size(col("__toks")) > 0)
         .select(col("doc_id"), DedupFns.simhash32Fast(col("__toks")).as("sim")),
     Some(s"""WITH t0 AS (SELECT doc_id, $toksSql AS tk FROM documents),
@@ -110,9 +110,9 @@ private[graft] trait QueriesDedupText { this: Queries.type =>
       val docs = t(s, dir, "documents")
       val cands = DedupFns.minhashCandidates(docs, "doc_id", "text")
       val grams = Fence.guard(Fence.guard(
-          docs.select(col("doc_id").as("id"), TextFns.tokensFast(col("text")).as("__toks"), Fence.col))
+          docs.select(col("doc_id").as("id"), TextFns.tokensFast(col("text")).as("__toks")))
         .filter(size(col("__toks")) >= 3)
-        .select(col("id"), DedupFns.wordNgramsFast(col("__toks"), 3).as("grams"), Fence.col))
+        .select(col("id"), DedupFns.wordNgramsFast(col("__toks"), 3).as("grams")))
         .repartition(col("id"))
       cands
         .join(grams.as("ga"), col("id_a") === col("ga.id"))
@@ -157,9 +157,9 @@ private[graft] trait QueriesDedupText { this: Queries.type =>
       val docs = t(s, dir, "documents")
       val cands = DedupFns.minhashCandidates(docs, "doc_id", "text")
       val grams = Fence.guard(Fence.guard(
-          docs.select(col("doc_id").as("id"), TextFns.tokensFast(col("text")).as("__toks"), Fence.col))
+          docs.select(col("doc_id").as("id"), TextFns.tokensFast(col("text")).as("__toks")))
         .filter(size(col("__toks")) >= 3)
-        .select(col("id"), DedupFns.wordNgramsFast(col("__toks"), 3).as("grams"), Fence.col))
+        .select(col("id"), DedupFns.wordNgramsFast(col("__toks"), 3).as("grams")))
         .repartition(col("id"))
       cands
         .join(grams.as("ga"), col("id_a") === col("ga.id"))
@@ -403,9 +403,9 @@ private[graft] trait QueriesDedupText { this: Queries.type =>
       val docs = t(s, dir, "documents")
       val est = DedupFns.minhashEstPairs(docs, "doc_id", "text")
       val grams = Fence.guard(Fence.guard(
-          docs.select(col("doc_id").as("id"), TextFns.tokensFast(col("text")).as("__toks"), Fence.col))
+          docs.select(col("doc_id").as("id"), TextFns.tokensFast(col("text")).as("__toks")))
         .filter(size(col("__toks")) >= 3)
-        .select(col("id"), DedupFns.wordNgramsFast(col("__toks"), 3).as("grams"), Fence.col))
+        .select(col("id"), DedupFns.wordNgramsFast(col("__toks"), 3).as("grams")))
         .repartition(col("id"))
       est.join(grams.as("ga"), col("id_a") === col("ga.id"))
         .join(grams.as("gb"), col("id_b") === col("gb.id"))
@@ -501,7 +501,7 @@ private[graft] trait QueriesDedupText { this: Queries.type =>
       import org.apache.spark.sql.expressions.Window
       val types = Fence.guard(
           t(s, dir, "documents").select(col("doc_id"),
-            array_distinct(TextFns.tokensFast(col("text"))).as("__tk"), Fence.col))
+            array_distinct(TextFns.tokensFast(col("text"))).as("__tk")))
         .select(col("doc_id"), explode(col("__tk")).as("tok"))
       types
         .withColumn("df", count(lit(1)).over(Window.partitionBy("tok")))
@@ -602,9 +602,9 @@ private[graft] trait QueriesDedupText { this: Queries.type =>
     (s, dir) => {
       val docs = t(s, dir, "documents")
       def grams(df: DataFrame) = Fence.guard(Fence.guard(
-          df.select(col("doc_id"), TextFns.tokensFast(col("text")).as("__toks"), Fence.col))
+          df.select(col("doc_id"), TextFns.tokensFast(col("text")).as("__toks")))
         .select(col("doc_id"),
-          DedupFns.wordNgramsFast(col("__toks"), 4).as("__grams"), Fence.col))
+          DedupFns.wordNgramsFast(col("__toks"), 4).as("__grams")))
         .select(col("doc_id"), explode(col("__grams")).as("g"))
       val probeGrams = grams(docs.filter(col("doc_id") < 3)).select(col("g")).distinct()
       val kill = grams(docs.filter(col("doc_id") >= 3))
@@ -632,7 +632,7 @@ private[graft] trait QueriesDedupText { this: Queries.type =>
     (s, dir) =>
       Fence.guard(
           t(s, dir, "documents")
-            .select(col("doc_id"), TextFns.tokensFast(col("text")).as("__toks"), Fence.col))
+            .select(col("doc_id"), TextFns.tokensFast(col("text")).as("__toks")))
         .select(col("doc_id"), explode(col("__toks")).as("term"))
         .repartition(col("doc_id"))
         .groupBy("doc_id", "term").agg(count(lit(1)).as("tf"))
@@ -690,7 +690,7 @@ private[graft] trait QueriesDedupText { this: Queries.type =>
       val W = 6
       val d = Fence.guard(
           t(s, dir, "documents")
-            .select(col("doc_id"), TextFns.tokensFast(col("text")).as("__tk"), Fence.col))
+            .select(col("doc_id"), TextFns.tokensFast(col("text")).as("__tk")))
         .filter(size(col("__tk")) >= 1)
         .select(col("doc_id"),
           element_at(col("__tk"), 1).as("__blk"),
@@ -951,12 +951,12 @@ private[graft] trait QueriesDedupText { this: Queries.type =>
           t(s, dir, "documents").select(col("doc_id"), col("source"),
             length(col("text")).cast("long").as("__c"),
             TextFns.textStatsFast(col("text")).as("__ts"),
-            TextFns.tokensFast(col("text")).as("__toks"), Fence.col))
+            TextFns.tokensFast(col("text")).as("__toks")))
         .select(col("doc_id"), col("source"), col("__c"),
           element_at(col("__ts"), 1).as("__t"),
           element_at(col("__ts"), 2).as("__p"),
           md5(concat_ws(" ", col("__toks"))).as("norm_md5"),
-          TextFns.langScoresFast(col("__toks")).as("__ls"), Fence.col))
+          TextFns.langScoresFast(col("__toks")).as("__ls")))
         .select(Seq(col("doc_id"), col("source"), col("norm_md5"),
           (least(lit(40L), (col("__c") / lit(10L)).cast("long")) +
             least(lit(30L), (element_at(col("__ls"), enIdx) * 100L /
@@ -1130,7 +1130,7 @@ private[graft] trait QueriesDedupText { this: Queries.type =>
       val base = Fence.guard(t(s, dir, "documents")
         .select(col("doc_id"),
           (col("source") === "src0").as("is_tgt"),
-          TextFns.tokensFast(col("text")).as("__toks"), Fence.col))
+          TextFns.tokensFast(col("text")).as("__toks")))
       val dt = base
         .select(col("doc_id"), col("is_tgt"), explode(col("__toks")).as("term"))
         .groupBy(col("doc_id"), col("is_tgt"), col("term"))
@@ -1181,9 +1181,9 @@ private[graft] trait QueriesDedupText { this: Queries.type =>
     (s, dir) => {
       val docs = t(s, dir, "documents")
       def grams(df: DataFrame) = Fence.guard(Fence.guard(
-          df.select(col("doc_id"), TextFns.tokensFast(col("text")).as("__toks"), Fence.col))
+          df.select(col("doc_id"), TextFns.tokensFast(col("text")).as("__toks")))
         .select(col("doc_id"),
-          DedupFns.wordNgramsFast(col("__toks"), 4).as("__grams"), Fence.col))
+          DedupFns.wordNgramsFast(col("__toks"), 4).as("__grams")))
         .select(col("doc_id"), explode(col("__grams")).as("g"))
       val probeGrams = grams(docs.filter(col("doc_id") < 3)).select(col("g")).distinct()
       grams(docs.filter(col("doc_id") >= 3))
@@ -1335,7 +1335,7 @@ private[graft] trait QueriesDedupText { this: Queries.type =>
           t(s, dir, "documents").select(col("doc_id"),
             length(col("text")).cast("long").as("__c"),
             TextFns.textStatsFast(col("text")).as("__ts"),
-            TextFns.tokensFast(col("text")).as("__toks"), Fence.col))
+            TextFns.tokensFast(col("text")).as("__toks")))
         .select(col("doc_id"), col("__c"),
           size(col("__toks")).cast("long").as("n_tokens"),
           length(concat_ws("", col("__toks"))).cast("long").as("__sumlen"),
@@ -1382,7 +1382,7 @@ private[graft] trait QueriesDedupText { this: Queries.type =>
     (s, dir) => {
       val terms = Fence.guard(
           t(s, dir, "documents")
-            .select(col("doc_id"), TextFns.tokensFast(col("text")).as("__toks"), Fence.col))
+            .select(col("doc_id"), TextFns.tokensFast(col("text")).as("__toks")))
         .select(col("doc_id"), explode(col("__toks")).as("term"))
       val vocab = terms.groupBy("term").agg(count(lit(1)).as("__cnt"))
         .orderBy(col("__cnt").desc, col("term")).limit(100)
@@ -1416,7 +1416,7 @@ private[graft] trait QueriesDedupText { this: Queries.type =>
     (s, dir) => {
       import org.apache.spark.sql.expressions.Window
       val counts = Fence.guard(
-          t(s, dir, "documents").select(TextFns.tokensFast(col("text")).as("__tk"), Fence.col))
+          t(s, dir, "documents").select(TextFns.tokensFast(col("text")).as("__tk")))
         .select(explode(col("__tk")).as("token"))
         .groupBy(col("token")).agg(count(lit(1)).as("cnt"))
         .orderBy(col("cnt").desc, col("token")).limit(100)
@@ -1462,7 +1462,7 @@ private[graft] trait QueriesDedupText { this: Queries.type =>
       import org.apache.spark.sql.expressions.Window
       val g = Fence.guard(
           t(s, dir, "documents")
-            .select(col("doc_id"), TextFns.tokensFast(col("text")).as("__toks"), Fence.col))
+            .select(col("doc_id"), TextFns.tokensFast(col("text")).as("__toks")))
         .filter(size(col("__toks")) >= 8)
         .select(col("doc_id"),
           explode(DedupFns.wordNgramsFast(col("__toks"), 8)).as("__gram"))
@@ -1494,7 +1494,7 @@ private[graft] trait QueriesDedupText { this: Queries.type =>
       val scrubbed = ScrubTerms.foldLeft(col("__toks"))((c, t) => array_remove(c, t))
       Fence.guard(
           t(s, dir, "documents")
-            .select(col("doc_id"), TextFns.tokensFast(col("text")).as("__toks"), Fence.col))
+            .select(col("doc_id"), TextFns.tokensFast(col("text")).as("__toks")))
         .select(col("doc_id"),
           size(col("__toks")).cast("long").as("n_tokens"),
           scrubbed.as("__clean"))
@@ -1536,7 +1536,7 @@ private[graft] trait QueriesDedupText { this: Queries.type =>
     "q_bpe_pairs",
     (s, dir) => {
       val pairs = Fence.guard(t(s, dir, "documents")
-          .select(TextFns.tokensFast(col("text")).as("__tk"), Fence.col))
+          .select(TextFns.tokensFast(col("text")).as("__tk")))
         .select(explode(col("__tk")).as("tok"))
         .filter(length(col("tok")) >= 2)
         .select(explode(expr(
@@ -1658,7 +1658,7 @@ private[graft] trait QueriesDedupText { this: Queries.type =>
         size(split(col("w"), "  ")).cast("long").as("nsym"),
         expr("substring(replace(w, ' ', ''), 1, length(replace(w, ' ', '')) - 4)").as("tok"))
       val d = Fence.guard(t(s, dir, "documents")
-          .select(col("doc_id"), TextFns.tokensFast(col("text")).as("__tk"), Fence.col))
+          .select(col("doc_id"), TextFns.tokensFast(col("text")).as("__tk")))
         .select(col("doc_id"), posexplode(col("__tk")).as(Seq("pos", "tok")))
       d.join(broadcast(vm), Seq("tok"))
         .groupBy(col("doc_id"))
@@ -1706,7 +1706,7 @@ private[graft] trait QueriesDedupText { this: Queries.type =>
         size(split(col("w"), "  ")).cast("long").as("nsym"),
         expr("substring(replace(w, ' ', ''), 1, length(replace(w, ' ', '')) - 4)").as("tok"))
       val d = Fence.guard(t(s, dir, "documents")
-          .select(col("doc_id"), TextFns.tokensFast(col("text")).as("__tk"), Fence.col))
+          .select(col("doc_id"), TextFns.tokensFast(col("text")).as("__tk")))
         .select(col("doc_id"), explode(col("__tk")).as("tok"))
       d.join(broadcast(vm), Seq("tok"))
         .groupBy(col("doc_id"))
@@ -1729,7 +1729,7 @@ private[graft] trait QueriesDedupText { this: Queries.type =>
     (s, dir) => {
       val toks = Fence.guard(
           t(s, dir, "documents")
-            .select(TextFns.tokensFast(col("text")).as("__toks"), Fence.col))
+            .select(TextFns.tokensFast(col("text")).as("__toks")))
         .filter(size(col("__toks")) >= 2)
       val pairs = toks
         .select(explode(arrays_zip(
@@ -1744,7 +1744,7 @@ private[graft] trait QueriesDedupText { this: Queries.type =>
       // broadcasts.
       val uni = Fence.guard(
           t(s, dir, "documents")
-            .select(TextFns.tokensFast(col("text")).as("__toks"), Fence.col))
+            .select(TextFns.tokensFast(col("text")).as("__toks")))
         .select(explode(col("__toks")).as("term"))
         .groupBy("term").agg(count(lit(1)).as("c"))
       // scalar N rides a 1-row broadcast (plans as a nested-loop join
@@ -1803,7 +1803,7 @@ private[graft] trait QueriesDedupText { this: Queries.type =>
       val base = Fence.guard(
           t(s, dir, "documents")
             .select(col("doc_id"), col("source"),
-              TextFns.tokensFast(col("text")).as("__toks"), Fence.col))
+              TextFns.tokensFast(col("text")).as("__toks")))
         .select(col("doc_id"), col("source"),
           size(col("__toks")).cast("long").as("n_tokens"))
       Relational.budgetCut(base, "source", "doc_id", "n_tokens", budget = 800L)
@@ -1833,7 +1833,7 @@ private[graft] trait QueriesDedupText { this: Queries.type =>
       import org.apache.spark.sql.expressions.Window
       val tk = Fence.guard(
           t(s, dir, "documents")
-            .select(col("doc_id"), TextFns.tokensFast(col("text")).as("__toks"), Fence.col))
+            .select(col("doc_id"), TextFns.tokensFast(col("text")).as("__toks")))
         .select(col("doc_id"), explode(array_distinct(col("__toks"))).as("term"))
         .repartition(col("term"))
       // df rides the SAME term partitioning as the posting rank (an
@@ -2025,7 +2025,7 @@ private[graft] trait QueriesDedupText { this: Queries.type =>
                                  'dup', acc.dup + if(acc.run >= 2L, acc.run, 0L)))),
              acc -> acc.dup + if(acc.run >= 2L, acc.run, 0L))"""
       Fence.guard(t(s, dir, "documents")
-          .select(col("doc_id"), TextFns.tokensFast(col("text")).as("__toks"), Fence.col))
+          .select(col("doc_id"), TextFns.tokensFast(col("text")).as("__toks")))
         .filter(size(col("__toks")) >= 3)
         .withColumn("__tris", array_sort(expr(
           """transform(sequence(1, size(__toks) - 2),
@@ -2225,9 +2225,9 @@ private[graft] trait QueriesDedupText { this: Queries.type =>
     (s, dir) => {
       val docs = t(s, dir, "documents")
       def grams(df: DataFrame) = Fence.guard(Fence.guard(
-          df.select(col("doc_id"), TextFns.tokensFast(col("text")).as("__toks"), Fence.col))
+          df.select(col("doc_id"), TextFns.tokensFast(col("text")).as("__toks")))
         .select(col("doc_id"),
-          DedupFns.wordNgramsFast(col("__toks"), 4).as("__grams"), Fence.col))
+          DedupFns.wordNgramsFast(col("__toks"), 4).as("__grams")))
         .select(col("doc_id"), explode(col("__grams")).as("g"))
       // deliberately UN-cached: the probe side is a handful of docs
       // (doc_id < 3), so recomputing its gram pipeline is cheap, and
@@ -2298,7 +2298,7 @@ private[graft] trait QueriesDedupText { this: Queries.type =>
   private[graft] def spanDupFlags(s: SparkSession, dir: String): DataFrame = {
     val g = Fence.guard(
         t(s, dir, "documents")
-          .select(col("doc_id"), TextFns.tokensFast(col("text")).as("__toks"), Fence.col))
+          .select(col("doc_id"), TextFns.tokensFast(col("text")).as("__toks")))
       .filter(size(col("__toks")) >= 8)
       .select(col("doc_id"),
         posexplode(DedupFns.wordNgramsPositional(col("__toks"), 8)).as(Seq("pos", "__gram")))
@@ -2408,7 +2408,7 @@ private[graft] trait QueriesDedupText { this: Queries.type =>
         .agg(collect_list(struct(col("__s").as("s"), col("__e").as("e"))).as("__islands"))
       Fence.guard(
           t(s, dir, "documents")
-            .select(col("doc_id"), TextFns.tokensFast(col("text")).as("__tk"), Fence.col))
+            .select(col("doc_id"), TextFns.tokensFast(col("text")).as("__tk")))
         .filter(size(col("__tk")) >= 8)
         .join(islands, Seq("doc_id"), "left")
         .select(col("doc_id"), col("__tk"),
@@ -2708,7 +2708,7 @@ private[graft] trait QueriesDedupText { this: Queries.type =>
                                named_struct('prev', x, 'run', 1L, 'types', acc.types + 1L, 'ss', acc.ss + acc.run * acc.run))),
              acc -> named_struct('types', acc.types, 'ss', acc.ss + acc.run * acc.run))"""
       Fence.guard(t(s, dir, "documents")
-          .select(col("doc_id"), array_sort(TextFns.tokensFast(col("text"))).as("__st"), Fence.col))
+          .select(col("doc_id"), array_sort(TextFns.tokensFast(col("text"))).as("__st")))
         .filter(size(col("__st")) > 0)
         .withColumn("__n", size(col("__st")).cast("long"))
         .withColumn("__f", expr(fold))

@@ -119,7 +119,7 @@ private[graft] trait QueriesEvents { this: Queries.type =>
     (s, dir) => {
       val e = t(s, dir, "embeddings")
       Fence.guard(e.select(col("label").cast("long").as("label"),
-          VectorFns.quantizeFast(col("embedding")).as("__qv"), Fence.col))
+          VectorFns.quantizeFast(col("embedding")).as("__qv")))
         .select(col("label"), VectorFns.qdotFast(col("__qv"), col("__qv")).as("__n2"))
         .groupBy("label")
         .agg(count(lit(1)).as("n"), sum(col("__n2")).as("sum_norm2"))
@@ -182,7 +182,7 @@ private[graft] trait QueriesEvents { this: Queries.type =>
       import org.apache.spark.sql.expressions.Window
       val k = 5
       val base = Fence.guard(t(s, dir, "documents")
-          .select(col("doc_id"), col("source"), TextFns.tokensFast(col("text")).as("__tk"), Fence.col))
+          .select(col("doc_id"), col("source"), TextFns.tokensFast(col("text")).as("__tk")))
         .select(col("doc_id"), col("source"),
           greatest(size(col("__tk")).cast("long"), lit(1L)).as("weight"))
         .withColumn("__u", TextFns.tokenHash(col("doc_id").cast("string")))
@@ -1000,7 +1000,7 @@ private[graft] trait QueriesEvents { this: Queries.type =>
       val d = Fence.guard(
           t(s, dir, "documents")
             .select(col("doc_id"), col("source"),
-              TextFns.tokensFast(col("text")).as("__toks"), Fence.col))
+              TextFns.tokensFast(col("text")).as("__toks")))
         .select(col("doc_id"), col("source"), size(col("__toks")).cast("long").as("__nt"))
       val q = VectorFns.quantizeFast(col("embedding"))
       val e = t(s, dir, "embeddings")

@@ -201,7 +201,7 @@ private[graft] trait QueriesPrivacy { this: Queries.type =>
       // release join's row side IS it — no second fact scan, no join
       // exchange (the aggregate-then-join-back form re-scanned events
       // for the group branch; PlanAudit)
-      val ev = Fence.keepAllPinned(events(s, dir)
+      val ev = Fence.keepAll(events(s, dir)
         .select(col("event_id"), col("user_id"), col("event_type"),
           expr("cast(floor(value / 100) as bigint)").as("band"))
         .filter(col("event_type").isNotNull && col("band").isNotNull)
@@ -238,7 +238,7 @@ private[graft] trait QueriesPrivacy { this: Queries.type =>
       // same shared-repartition discipline as q_kanon: one (type,
       // band) exchange serves the diversity aggregate and the release
       // join's row side
-      val ev = Fence.keepAllPinned(events(s, dir)
+      val ev = Fence.keepAll(events(s, dir)
         .select(col("event_id"), col("user_id"), col("event_type"),
           expr("cast(floor(value / 100) as bigint)").as("band"),
           (get_json_object(col("props"), "$.k").cast("long") % 16).as("sens"))

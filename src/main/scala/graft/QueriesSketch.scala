@@ -117,7 +117,7 @@ private[graft] trait QueriesSketch { this: Queries.type =>
     "q_hll_rollup",
     (s, dir) => {
       def toks = Fence.guard(t(s, dir, "documents")
-          .select(col("source"), TextFns.tokensFast(col("text")).as("__tk"), Fence.col))
+          .select(col("source"), TextFns.tokensFast(col("text")).as("__tk")))
         .select(col("source"), explode(col("__tk")).as("tok"))
       val per = toks.groupBy("source")
         .agg(hll_sketch_agg(col("tok")).as("__sk"),
@@ -164,7 +164,7 @@ private[graft] trait QueriesSketch { this: Queries.type =>
       val k = 32
       val mg = udaf(new graft.functions.MisraGries(k))
       def toks = Fence.guard(t(s, dir, "documents")
-          .select(col("source"), TextFns.tokensFast(col("text")).as("__tk"), Fence.col))
+          .select(col("source"), TextFns.tokensFast(col("text")).as("__tk")))
         .select(col("source"), explode(col("__tk")).as("tok"))
       val entries = toks.groupBy(col("source"))
         .agg(mg(col("tok")).as("sketch"), count(lit(1)).as("n_tokens"))
@@ -208,7 +208,7 @@ private[graft] trait QueriesSketch { this: Queries.type =>
       val k = 32
       val mg = udaf(new graft.functions.MisraGries(k))
       def toks = Fence.guard(t(s, dir, "documents")
-          .select(col("source"), TextFns.tokensFast(col("text")).as("__tk"), Fence.col))
+          .select(col("source"), TextFns.tokensFast(col("text")).as("__tk")))
         .select(col("source"), explode(col("__tk")).as("tok"))
       // one aggregation carries BOTH the sketch and the group total
       val candidates = toks.groupBy(col("source"))
@@ -259,7 +259,7 @@ private[graft] trait QueriesSketch { this: Queries.type =>
       val cms = udaf(new graft.functions.CountMin(depth, width))
       val probes = Seq("the", "of", "and", "to", "a", "in", "data", "model", "stream", "query")
       val g = Fence.guard(t(s, dir, "documents")
-          .select(col("source"), TextFns.tokensFast(col("text")).as("__tk"), Fence.col))
+          .select(col("source"), TextFns.tokensFast(col("text")).as("__tk")))
         .select(col("source"), explode(col("__tk")).as("tok"))
         .groupBy(col("source"))
         .agg(cms(col("tok")).as("sketch"), count(lit(1)).as("n_tokens"))

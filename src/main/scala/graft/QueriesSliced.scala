@@ -196,7 +196,7 @@ private[graft] trait QueriesSliced { this: Queries.type =>
         .select(col("doc_id"), col("text").cast("binary").as("payload"))
         .filter(length(col("payload").cast("string")) >= 4)
         .select(col("doc_id").as("id"),
-          Multimodal.phash32(col("payload")).as("sim"), Fence.col)
+          Multimodal.phash32(col("payload")).as("sim"))
       DedupFns.nearDupPairsFromSigs(sigs, maxHamming = 3)
     },
     Some(s"""${phashPairsSql(s" AND ${sliceDocPredSql("doc_id")}")}

@@ -487,7 +487,7 @@ private[graft] trait QueriesStreamOps { this: Queries.type =>
       // otherwise re-tokenize every row (see functions.Fence)
       Fence.guard(
           t(s, dir, "documents")
-            .select(TextFns.tokensFast(col("text")).as("__toks"), Fence.col))
+            .select(TextFns.tokensFast(col("text")).as("__toks")))
         .select(explode(col("__toks")).as("word"))
         .groupBy("word").agg(count(lit(1)).as("cnt"))
         .orderBy(col("cnt").desc, col("word"))

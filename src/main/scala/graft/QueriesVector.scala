@@ -526,7 +526,7 @@ private[graft] trait QueriesVector { this: Queries.type =>
         .select(col("doc_id"), col("text").cast("binary").as("payload"))
         .filter(length(col("payload").cast("string")) >= 4)
         .select(col("doc_id").as("id"),
-          Multimodal.phash32(col("payload")).as("sim"), Fence.col)
+          Multimodal.phash32(col("payload")).as("sim"))
       DedupFns.nearDupPairsFromSigs(sigs, maxHamming = 3)
     },
     Some(s"""${phashPairsSql("")}
@@ -555,7 +555,7 @@ private[graft] trait QueriesVector { this: Queries.type =>
         .select(col("doc_id"), col("text").cast("binary").as("payload"))
         .filter(length(col("payload").cast("string")) >= 4)
         .select(col("doc_id").as("id"),
-          Multimodal.phash32(col("payload")).as("sim"), Fence.col)
+          Multimodal.phash32(col("payload")).as("sim"))
       DedupFns.nearDupCountsFromSigs(sigs, maxHamming = 3)
     },
     Some(s"""${phashPairsSql("")},
@@ -779,8 +779,7 @@ private[graft] trait QueriesVector { this: Queries.type =>
       // Fence pins the qdot+quantize to one evaluation under the
       // pushed-down isNotNull
       val proj = Fence.guard(emb.select(col("vec_id"),
-          VectorFns.qdotFast(VectorFns.quantizeFast(col("embedding")), typedLit(pc)).as("proj"),
-          Fence.col))
+          VectorFns.qdotFast(VectorFns.quantizeFast(col("embedding")), typedLit(pc)).as("proj")))
         .filter(col("proj").isNotNull)
       val d = t(s, dir, "documents").select(col("doc_id"), col("source"))
       proj.join(d, proj("vec_id") === d("doc_id"))
@@ -889,8 +888,8 @@ private[graft] trait QueriesVector { this: Queries.type =>
       val e = t(s, dir, "embeddings")
       val cb = VectorFns.pqCodebook(e, "vec_id", "embedding", m = 8, k = 16, dims = 64)
       Fence.guard(Fence.guard(
-          e.select(col("vec_id"), VectorFns.quantizeFast(col("embedding")).as("qv"), Fence.col))
-        .select(col("vec_id"), col("qv"), VectorFns.pqEncode(col("qv"), cb).as("codes"), Fence.col))
+          e.select(col("vec_id"), VectorFns.quantizeFast(col("embedding")).as("qv")))
+        .select(col("vec_id"), col("qv"), VectorFns.pqEncode(col("qv"), cb).as("codes")))
         .select(col("vec_id"),
           (0 until 8).map(mi => element_at(col("codes"), mi + 1) * lit(1L << (4 * mi))).reduce(_ + _).as("pq_code"),
           VectorFns.pqError(col("qv"), col("codes"), cb).as("qerr"))

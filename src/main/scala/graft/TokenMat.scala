@@ -46,7 +46,7 @@ object TokenMat {
     } catch { case _: Throwable => () }
     val docs = spark.read.parquet(s"$sfDir/documents.parquet")
     val toks = Fence.guard(docs.select(col("doc_id"), col("lang"), col("source"),
-      TextFns.tokensFast(col("text")).as("__toks"), Fence.col))
+      TextFns.tokensFast(col("text")).as("__toks")))
     graft.sinks.Sinks.bucketed(toks, table, Seq("doc_id"), 32)
     val n = spark.table(table).count()
     // Freshness stamp (ADVICE r15): the reader (Queries.tokenMatTable)

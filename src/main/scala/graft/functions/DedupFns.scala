@@ -120,9 +120,9 @@ object DedupFns {
   def minhashEstPairs(df: DataFrame, idCol: String, textCol: String, n: Int = 3): DataFrame = {
     val cands = minhashCandidates(df, idCol, textCol)
     val sigs = Fence.guard(Fence.guard(
-        df.select(col(idCol).as("id"), tokensFast(col(textCol)).as("__toks"), Fence.col))
+        df.select(col(idCol).as("id"), tokensFast(col(textCol)).as("__toks")))
       .filter(size(col("__toks")) >= n)
-      .select(col("id"), minhashSigFast(col("__toks"), n).as("sig"), Fence.col))
+      .select(col("id"), minhashSigFast(col("__toks"), n).as("sig")))
       .repartition(col("id"))
     cands
       .join(sigs.as("sa"), col("id_a") === col("sa.id"))
@@ -151,10 +151,10 @@ object DedupFns {
     // generate-inferred size/isnotnull predicates into the projections
     // and the signature is hashed 3× per side
     val toksDf = Fence.guard(
-        df.select(col(idCol).as("id"), tokensFast(col(textCol)).as("__toks"), Fence.col))
+        df.select(col(idCol).as("id"), tokensFast(col(textCol)).as("__toks")))
       .filter(size(col("__toks")) >= 3)
     val sigs = Fence.guard(
-        toksDf.select(col("id"), minhashBandsFast(col("__toks"), 3).as("__bands"), Fence.col))
+        toksDf.select(col("id"), minhashBandsFast(col("__toks"), 3).as("__bands")))
       .select(col("id"), posexplode(col("__bands")).as(Seq("band", "bh")))
       .repartition(col("band"), col("bh"))
     val a = sigs.as("a").hint("shuffle_hash")
@@ -224,9 +224,9 @@ object DedupFns {
   def simhashNearDupPairs(df: DataFrame, idCol: String, textCol: String,
       maxHamming: Int): DataFrame = {
     val sims = Fence.guard(
-        df.select(col(idCol).as("id"), tokensFast(col(textCol)).as("__toks"), Fence.col))
+        df.select(col(idCol).as("id"), tokensFast(col(textCol)).as("__toks")))
       .filter(size(col("__toks")) > 0)
-      .select(col("id"), simhash32Fast(col("__toks")).as("sim"), Fence.col)
+      .select(col("id"), simhash32Fast(col("__toks")).as("sim"))
     nearDupPairsFromSigs(sims, maxHamming)
   }
 
@@ -234,9 +234,9 @@ object DedupFns {
     * factored over an ALREADY-COMPUTED 32-bit signature projection so
     * any locality-sensitive signature rides the same exact candidate
     * generator — the multimodal perceptual-hash stub
-    * (Multimodal.phash32) is the second caller. `sigs` must be a
-    * FENCED projection carrying (id, sim, Fence.col) — the fence pins
-    * the (expensive) signature to one evaluation per row; both
+    * (Multimodal.phash32) is the second caller. `sigs` is the
+    * (id, sim) projection; the fence put on it here pins the
+    * (expensive) signature to one evaluation per row; both
     * self-join sides then share ONE exchange (see the shape notes on
     * [[simhashNearDupPairs]]). Returns (id_a < id_b, dist), each pair
     * once, exact for maxHamming ≤ 3.
@@ -379,9 +379,9 @@ object DedupFns {
     // Fences pin tokenize and the shingle array to one evaluation each
     // (see functions.Fence)
     val docs = Fence.guard(Fence.guard(
-        df.select(col(idCol).as("id"), tokensFast(col(textCol)).as("__toks"), Fence.col))
+        df.select(col(idCol).as("id"), tokensFast(col(textCol)).as("__toks")))
       .filter(size(col("__toks")) >= n)
-      .select(col("id"), wordNgramsFast(col("__toks"), n).as("grams"), Fence.col))
+      .select(col("id"), wordNgramsFast(col("__toks"), n).as("grams")))
     // ONE gram exchange feeds the df-aggregation AND both self-join
     // sides (ReusedExchange) — without it the tokenize+shingle work and
     // the frequency aggregation both run once per reference (5× total).
@@ -472,11 +472,10 @@ object DedupFns {
     // evaluation each: the array feeds the explode AND both
     // exact-rescore joins
     val docs = Fence.guard(Fence.guard(
-        df.select(col(idCol).as("id"), tokensFast(col(textCol)).as("__toks"), Fence.col))
+        df.select(col(idCol).as("id"), tokensFast(col(textCol)).as("__toks")))
       .filter(size(col("__toks")) >= n)
       .select(col("id"),
-        (if (n == 1) array_distinct(col("__toks")) else wordNgramsFast(col("__toks"), n)).as("toks"),
-        Fence.col))
+        (if (n == 1) array_distinct(col("__toks")) else wordNgramsFast(col("__toks"), n)).as("toks")))
       .filter(size(col("toks")) > 0)
     // one tok exchange feeds the df-aggregation and the ranked join
     // side. `sz` rides from the doc projection (the shingle array is
@@ -521,7 +520,7 @@ object DedupFns {
     val denom = 1000 + tauPermille
     val preShared = Fence.guard(
       pre.repartition(col("tok"))
-        .select(col("id"), col("tok"), col("rn"), col("sz"), Fence.col))
+        .select(col("id"), col("tok"), col("rn"), col("sz")))
     val preA = preShared.filter(
       col("rn") <= col("sz") - expr(s"(2 * $tauPermille * sz + ${denom - 1}) div $denom") + 1)
     // The pair aggregation replaces a bare `distinct()` with PPJoin+'s

@@ -1,11 +1,14 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.{DataFrame, GraftBridge}
+import org.apache.spark.sql.catalyst.expressions.Attribute
+import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, UnaryNode}
+import org.apache.spark.sql.execution.{SparkPlan, SparkStrategy}
 
 /** Optimizer fence: pins an EXPENSIVE projection (MinHash, SimHash,
   * n-gram shingles, vector quantization, …) to exactly ONE evaluation
-  * per row.
+  * per row, and keeps a shared subtree canonically equal across the
+  * branches that reuse it.
   *
   * Why it exists: Catalyst pushes predicates through deterministic
   * projections by substituting aliases, and constraint/generate
@@ -14,98 +17,78 @@ import org.apache.spark.sql.functions._
   * signature projection, each such predicate re-evaluates the full
   * signature expression per row: the minhash candidate pipeline
   * measured THREE evaluations of the per-document hashing per
-  * self-join side before fencing.
+  * self-join side before fencing. Separately, branch-local column
+  * pruning specializes each consumer's copy of a shared aggregate or
+  * exchange (dropping a partial agg function, reordering the function
+  * list), so the copies stop being canonically equal and AQE exchange
+  * reuse silently re-runs the subtree per consumer — the failure mode
+  * that made q11_stock's scalar-total branch re-scan the fact.
   *
-  * How: a projection containing any non-deterministic field is a
-  * pushdown barrier (PushPredicateThroughNonJoin requires all fields
-  * deterministic), so `Fence.col` adds a rand() field to the expensive
-  * projection. An unused non-deterministic field would be pruned away
-  * (and a bare non-deterministic FILTER does not block: Spark may
-  * reorder deterministic predicates past it), so `Fence.guard`
-  * references the field in an always-true filter and then drops it —
-  * the filter keeps the field alive through pruning, and the
-  * comparison is against the materialized attribute, which no rule can
-  * range-fold. Inferred/pushed predicates stack above that filter and
-  * read the materialized signature column.
-  *
-  * Cost: one rand() per row (~ns) and the loss of pushdown through the
-  * fenced projection — apply it AFTER any selective filters you want
-  * pushed to the scan. The fixed seed keeps both sides of a self-join
-  * canonically equal, so exchange reuse still dedupes the shared
-  * subplan.
+  * The fence is a [[GraftFence]] logical node that the optimizer does
+  * not know: no predicate is pushed, no constraint inferred and no
+  * projection collapsed through it, and it never moves — above a
+  * repartition it stays above the repartition. [[FenceStrategy]]
+  * plans it as its child, so it costs nothing at run time. Both ship
+  * in `graft.GraftExtensions`; a session without them fails at
+  * construction rather than silently dropping the fence.
   *
   * Usage:
   * {{{
-  *   Fence.guard(df.select(col("id"), expensive.as("sig"), Fence.col))
+  *   Fence.guard(df.select(col("id"), expensive.as("sig")))
   *     .filter(...)   // evaluates against the materialized "sig"
   * }}}
   */
 object Fence {
-  val name = "__graft_fence"
 
-  /** The fence field — include in the expensive projection. */
-  def col: Column = rand(7).as(name)
-
-  /** Consume and drop the fence field; call directly on the fenced
-    * projection.
+  /** Pushdown barrier over an expensive projection: predicates above it
+    * read the materialized columns. Unused columns still prune through
+    * it. Apply it AFTER any selective filters you want pushed to the
+    * scan.
     */
-  def guard(df: DataFrame): DataFrame =
-    df.filter(org.apache.spark.sql.functions.col(name) >= 0).drop(name)
+  def guard(df: DataFrame): DataFrame = fence(df, keepAll = false)
 
-  /** Canonicality fence for a subtree referenced MORE THAN ONCE:
-    * returns `df` filtered by an always-true predicate that references
-    * EVERY column, so branch-local column pruning cannot specialize
-    * one consumer's copy of the shared aggregate/exchange (dropping a
-    * partial agg function, or reordering the function list) and
-    * silently defeat AQE exchange reuse — the failure mode that made
-    * q11_stock's scalar-total branch re-scan the fact.
-    *
-    * The predicate is `xxhash64(all columns) >= Long.MinValue`: true
-    * for every row (xxhash64 is non-null total), referencing all
-    * columns (nothing prunes), and un-foldable (Catalyst has no
-    * integer range analysis, and the hash of non-literal inputs never
-    * constant-folds). Cost: every consumer branch carries all of
-    * `df`'s columns up to this fence — apply it only to BOUNDED frames
-    * (per-key aggregates, dimension projections), where a few unused
-    * columns in a reused exchange are far cheaper than recomputing the
-    * subtree per consumer.
+  /** Canonicality fence for a subtree referenced MORE THAN ONCE: every
+    * column is a reference of the node, so no consumer branch can prune
+    * or push into its copy of the shared aggregate/exchange. Cost:
+    * every consumer branch carries all of `df`'s columns up to this
+    * fence — apply it only to BOUNDED frames (per-key aggregates,
+    * dimension projections), where a few unused columns in a reused
+    * exchange are far cheaper than recomputing the subtree per
+    * consumer.
     *
     * Note: predicates INFERRED above the fence (a downstream join's
-    * isnotnull on the key) still push below it in that branch only —
-    * if a consumer joins on a nullable key, pre-materialize the
-    * `isNotNull` inside the shared subtree too (the [[guard]] pattern
-    * / round-9 dup-flag join discipline).
+    * isnotnull on the key) stay above it in that branch only — if a
+    * consumer joins on a nullable key, pre-materialize the `isNotNull`
+    * inside the shared subtree too (the round-9 dup-flag join
+    * discipline).
     */
-  /** The always-true all-columns predicate both fences share: an
-    * xxhash64 over every column (nothing prunes) compared against
-    * Long.MinValue (true for any long; Catalyst has no integer range
-    * analysis to fold it).
-    */
-  private def allColsPred(df: DataFrame): Column = {
-    val cols = df.columns.toIndexedSeq.map(org.apache.spark.sql.functions.col)
-    xxhash64(cols: _*) >= Long.MinValue
+  def keepAll(df: DataFrame): DataFrame = fence(df, keepAll = true)
+
+  private def fence(df: DataFrame, keepAll: Boolean): DataFrame = {
+    if (!GraftBridge.plannerStrategies(df).contains(FenceStrategy))
+      throw new IllegalStateException(
+        "this session cannot plan graft's optimizer fence (GraftFence): " +
+          "build it with graft.GraftSession or " +
+          "--conf spark.sql.extensions=graft.GraftExtensions")
+    GraftBridge.withPlan(df)(p => GraftFence(if (keepAll) p.output else Nil, p))
   }
+}
 
-  def keepAll(df: DataFrame): DataFrame = df.filter(allColsPred(df))
+/** The fence node. `keep` lists the child columns the node references:
+  * none for [[Fence.guard]], all of them for [[Fence.keepAll]].
+  */
+case class GraftFence(keep: Seq[Attribute], child: LogicalPlan) extends UnaryNode {
+  override def output: Seq[Attribute] = child.output
+  override protected def withNewChildInternal(newChild: LogicalPlan): GraftFence =
+    copy(child = newChild)
+}
 
-  /** [[keepAll]] variant that also PINS the fence at its position.
-    * keepAll's predicate is deterministic, so above a
-    * repartition/exchange PushPredicateThroughNonJoin sinks it to the
-    * scan — and branch-local pruning then inserts per-consumer
-    * Projects BETWEEN the sunk filter and the exchange, which
-    * de-canonicalizes the exchange anyway (observed on q_kanon's
-    * shared (type, band) repartition). Embedding a never-true
-    * NON-DETERMINISTIC disjunct makes the predicate unpushable, so it
-    * stays directly above the exchange and every column stays alive
-    * below it in every branch. The disjunct is
-    * `spark_partition_id() < 0` — never true, and unlike a rand()
-    * bound it survives optimization (Catalyst DOES range-fold
-    * `rand() < 2` to true and then erases the whole fence). Use this
-    * when fencing a REPARTITION; plain keepAll suffices above an
-    * aggregate (predicates referencing aggregate output can't sink
-    * through it).
-    */
-  def keepAllPinned(df: DataFrame): DataFrame =
-    df.filter(allColsPred(df) ||
-      org.apache.spark.sql.functions.spark_partition_id() < 0)
+/** Plans a [[GraftFence]] as its child: the fence shapes the optimized
+  * plan only and never reaches the physical one.
+  */
+object FenceStrategy extends SparkStrategy {
+  override def apply(plan: LogicalPlan): Seq[SparkPlan] = plan match {
+    case GraftFence(_, child) => planLater(child) :: Nil
+    case _ => Nil
+  }
 }

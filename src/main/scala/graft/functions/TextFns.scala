@@ -180,7 +180,7 @@ object TextFns {
   def chunkDocs(df: org.apache.spark.sql.DataFrame, idCol: String, textCol: String,
       chunk: Int = 64, stride: Int = 32): org.apache.spark.sql.DataFrame =
     Fence.guard(
-        df.select(col(idCol), tokensFast(col(textCol)).as("__toks"), Fence.col))
+        df.select(col(idCol), tokensFast(col(textCol)).as("__toks")))
       .filter(size(col("__toks")) > 0)
       .select(col(idCol), col("__toks"),
         explode(sequence(lit(0), size(col("__toks")) - 1, lit(stride))).as("start"))
@@ -204,7 +204,7 @@ object TextFns {
   def cdcChunkDocs(df: org.apache.spark.sql.DataFrame, idCol: String, textCol: String,
       modulus: Int = 8): org.apache.spark.sql.DataFrame =
     Fence.guard(
-        df.select(col(idCol), tokensFast(col(textCol)).as("__toks"), Fence.col))
+        df.select(col(idCol), tokensFast(col(textCol)).as("__toks")))
       .filter(size(col("__toks")) >= 1)
       .withColumn("__starts",
         // position p starts a chunk iff p == 0 or the previous token
@@ -258,12 +258,11 @@ object TextFns {
     def tlenSum(arr: Column): Column =
       coalesce(aggregate(arr, lit(0L), (a, x) => a + length(x.getField("txt")).cast("long")), lit(0L))
     Fence.guard(Fence.guard(
-        df.select(col(idCol), blocks.as("__b"), Fence.col))
+        df.select(col(idCol), blocks.as("__b")))
       .select(col(idCol), col("__b"),
         filter(col("__b"), b =>
           b.getField("alen") * 1000 < length(b.getField("txt")).cast("long") * maxLinkDensityMilli)
-          .as("__k"),
-        Fence.col))
+          .as("__k")))
       .select(col(idCol),
         size(col("__b")).cast("long").as("n_blocks"),
         size(col("__k")).cast("long").as("n_kept"),

@@ -109,9 +109,9 @@ object VectorFns {
     // recompute them per row)
     def withBuckets(df: DataFrame, id: String, vec: String) =
       Fence.guard(Fence.guard(
-          df.select(col(idCol).as(id), quantizeFast(col(vecCol)).as(vec), Fence.col))
+          df.select(col(idCol).as(id), quantizeFast(col(vecCol)).as(vec)))
         .select(col(id), col(vec),
-          lshBucketsFast(col(vec), tables, planes).as("__bks"), Fence.col))
+          lshBucketsFast(col(vec), tables, planes).as("__bks")))
         .select(col(id), col(vec),
           posexplode(col("__bks")).as(Seq("tbl", "bucket")))
     val q = withBuckets(queries, "query_id", "qv")
@@ -186,13 +186,13 @@ object VectorFns {
     // cid join key otherwise gets an inferred isnotnull that re-runs
     // the whole probe computation — see functions.Fence)
     val c = Fence.guard(Fence.guard(
-        corpus.select(col(idCol).as("neighbor_id"), quantizeFast(col(vecCol)).as("cv"), Fence.col))
+        corpus.select(col(idCol).as("neighbor_id"), quantizeFast(col(vecCol)).as("cv")))
       .select(col("neighbor_id"), col("cv"),
-        element_at(ivfProbesFast(col("cv"), cents, 1), 1).as("cid"), Fence.col))
+        element_at(ivfProbesFast(col("cv"), cents, 1), 1).as("cid")))
     val q = Fence.guard(Fence.guard(
-        queries.select(col(idCol).as("query_id"), quantizeFast(col(vecCol)).as("qv"), Fence.col))
+        queries.select(col(idCol).as("query_id"), quantizeFast(col(vecCol)).as("qv")))
       .select(col("query_id"), col("qv"),
-        ivfProbesFast(col("qv"), cents, nprobe).as("__probes"), Fence.col))
+        ivfProbesFast(col("qv"), cents, nprobe).as("__probes")))
       .select(col("query_id"), col("qv"), explode(col("__probes")).as("cid"))
     val scored = q.join(c, Seq("cid")).filter(col("query_id") =!= col("neighbor_id"))
       .select(col("query_id"), col("neighbor_id"), qdotFast(col("qv"), col("cv")).as("score"))
@@ -224,13 +224,13 @@ object VectorFns {
     val maxP = math.min(nprobes.max, kCentroids)
     val cents = typedLit(ivfCentroids(corpus, idCol, vecCol, kCentroids))
     val c = Fence.guard(Fence.guard(
-        corpus.select(col(idCol).as("neighbor_id"), quantizeFast(col(vecCol)).as("cv"), Fence.col))
+        corpus.select(col(idCol).as("neighbor_id"), quantizeFast(col(vecCol)).as("cv")))
       .select(col("neighbor_id"), col("cv"),
-        element_at(ivfProbesFast(col("cv"), cents, 1), 1).as("cid"), Fence.col))
+        element_at(ivfProbesFast(col("cv"), cents, 1), 1).as("cid")))
     val q = Fence.guard(Fence.guard(
-        queries.select(col(idCol).as("query_id"), quantizeFast(col(vecCol)).as("qv"), Fence.col))
+        queries.select(col(idCol).as("query_id"), quantizeFast(col(vecCol)).as("qv")))
       .select(col("query_id"), col("qv"),
-        ivfProbesFast(col("qv"), cents, maxP).as("__probes"), Fence.col))
+        ivfProbesFast(col("qv"), cents, maxP).as("__probes")))
       .select(col("query_id"), col("qv"), posexplode(col("__probes")).as(Seq("__pr0", "cid")))
       .select(col("query_id"), col("qv"), (col("__pr0") + 1).cast("long").as("__pr"), col("cid"))
     val pArr = typedLit(nprobes.map(_.toLong))
@@ -312,10 +312,10 @@ object VectorFns {
     // aggregates share the key, so fcid and the carried vector always
     // come from the same winning row.
     val cRows = Fence.guard(Fence.guard(
-        corpus.select(col(idCol).as("neighbor_id"), quantizeFast(col(vecCol)).as("cv"), Fence.col))
+        corpus.select(col(idCol).as("neighbor_id"), quantizeFast(col(vecCol)).as("cv")))
       .filter(col("cv").isNotNull)
       .select(col("neighbor_id"), col("cv"), qdotFast(col("cv"), col("cv")).as("cnrm"),
-        ivfProbesFast(col("cv"), coarse, assignProbes).as("__cps"), Fence.col))
+        ivfProbesFast(col("cv"), coarse, assignProbes).as("__cps")))
       .select(col("neighbor_id"), col("cv"), col("cnrm"), explode(col("__cps")).as("ccid"))
     val asg = cRows.join(broadcast(fineRel), "ccid")
       .select(col("neighbor_id"), col("cv"),
@@ -327,10 +327,10 @@ object VectorFns {
     // query side: coarse probe → rank fine centroids in probed cells →
     // keep nprobe (the window spans coarseProbes·k/k1 rows per query)
     val qRows = Fence.guard(Fence.guard(
-        queries.select(col(idCol).as("query_id"), quantizeFast(col(vecCol)).as("qv"), Fence.col))
+        queries.select(col(idCol).as("query_id"), quantizeFast(col(vecCol)).as("qv")))
       .filter(col("qv").isNotNull)
       .select(col("query_id"), col("qv"), qdotFast(col("qv"), col("qv")).as("qnrm"),
-        ivfProbesFast(col("qv"), coarse, coarseProbes).as("__qps"), Fence.col))
+        ivfProbesFast(col("qv"), coarse, coarseProbes).as("__qps")))
       .select(col("query_id"), col("qv"), col("qnrm"), explode(col("__qps")).as("ccid"))
     // nearest-nprobe cells per query via the mergeable top-k aggregate
     // (negated distance: (-d DESC, fcid ASC) == (d ASC, fcid ASC)) —
@@ -379,10 +379,10 @@ object VectorFns {
       kCentroids: Int = 16): DataFrame = {
     val cents = typedLit(ivfCentroids(corpus, idCol, vecCol, kCentroids))
     val assigned = Fence.guard(Fence.guard(
-        corpus.select(col(idCol).as("id"), quantizeFast(col(vecCol)).as("qv"), Fence.col))
+        corpus.select(col(idCol).as("id"), quantizeFast(col(vecCol)).as("qv")))
       .filter(col("qv").isNotNull)
       .select(col("id"), col("qv"),
-        element_at(ivfProbesFast(col("qv"), cents, 1), 1).as("cid"), Fence.col))
+        element_at(ivfProbesFast(col("qv"), cents, 1), 1).as("cid")))
     val sums = assigned
       .select(col("cid"), posexplode(col("qv")).as(Seq("dim", "v")))
       .groupBy("cid", "dim")
@@ -434,7 +434,7 @@ object VectorFns {
     // the projection and every round's scan pays it twice (the
     // kmeansStep/ivfTopK precedent)
     val q = Fence.guard(
-        corpus.select(quantizeFast(col(vecCol)).as("qv"), Fence.col))
+        corpus.select(quantizeFast(col(vecCol)).as("qv")))
       .filter(col("qv").isNotNull)
     if (cents.isEmpty)
       return q.limit(0).select(lit(0L).as("cid"),
@@ -506,7 +506,7 @@ object VectorFns {
     val k1 = math.max(1, math.ceil(math.sqrt(kCentroids.toDouble)).toInt)
     val q = Fence.guard(
         corpus.select(col(idCol).cast("string").as("__id"),
-          quantizeFast(col(vecCol)).as("qv"), Fence.col))
+          quantizeFast(col(vecCol)).as("qv")))
       .filter(col("qv").isNotNull)
     // initial fine relation: the SAME deterministic (md5(id), id) sample
     // as ivfCentroids(k), fcid = position in sample order — funneled
@@ -534,7 +534,7 @@ object VectorFns {
     def assignFull(fineRel: DataFrame): DataFrame =
       Fence.guard(q.crossJoin(broadcast(arr1(fineRel)))
           .select(element_at(ivfProbesFast(col("qv"), col("__cents"), 1), 1).as("cid"),
-            col("qv"), col("__cents"), Fence.col))
+            col("qv"), col("__cents")))
         .select(col("cid"), col("qv"), col("__cents"))
     // TRUNCATED assignment: coarse-probe routing + broadcast equi-join
     // + min_by argmin on the exact (d², fcid) struct (IvfProbesExpr's
@@ -545,7 +545,7 @@ object VectorFns {
         fineRel.withColumn("ccid", element_at(ivfProbesFast(col("fv"), coarse, 1), 1)))
       val rows = Fence.guard(q.select(col("__id"), col("qv"),
           qdotFast(col("qv"), col("qv")).as("__qn"),
-          ivfProbesFast(col("qv"), coarse, probes).as("__cps"), Fence.col))
+          ivfProbesFast(col("qv"), coarse, probes).as("__cps")))
         .select(col("__id"), col("qv"), col("__qn"), explode(col("__cps")).as("ccid"))
       rows.join(cells, "ccid")
         .select(col("__id"), col("qv"),
@@ -796,12 +796,12 @@ object VectorFns {
       kNN: Int, m: Int = 8, k: Int = 16, dims: Int = 64): DataFrame = {
     val cb = pqCodebook(corpus, idCol, vecCol, m, k, dims)
     val c = Fence.guard(Fence.guard(
-        corpus.select(col(idCol).as("neighbor_id"), quantizeFast(col(vecCol)).as("cv"), Fence.col))
-      .select(col("neighbor_id"), pqEncode(col("cv"), cb).as("codes"), Fence.col))
+        corpus.select(col(idCol).as("neighbor_id"), quantizeFast(col(vecCol)).as("cv")))
+      .select(col("neighbor_id"), pqEncode(col("cv"), cb).as("codes")))
       .select(col("neighbor_id"), col("codes"))
     val q = Fence.guard(Fence.guard(
-        queries.select(col(idCol).as("query_id"), quantizeFast(col(vecCol)).as("qv"), Fence.col))
-      .select(col("query_id"), pqDistTable(col("qv"), cb).as("dtab"), Fence.col))
+        queries.select(col(idCol).as("query_id"), quantizeFast(col(vecCol)).as("qv")))
+      .select(col("query_id"), pqDistTable(col("qv"), cb).as("dtab")))
       .select(col("query_id"), col("dtab"))
     val scored = broadcast(q).join(c, col("query_id") =!= col("neighbor_id"))
       .select(col("query_id"), col("neighbor_id"),
@@ -825,7 +825,7 @@ object VectorFns {
       kNN: Int): DataFrame = {
     def coded(df: DataFrame, id: String, code: String) =
       Fence.guard(
-          df.select(col(idCol).as(id), quantizeFast(col(vecCol)).as("__qv"), Fence.col))
+          df.select(col(idCol).as(id), quantizeFast(col(vecCol)).as("__qv")))
         .select(col(id), signBitsFast(col("__qv")).as(code))
     val q = coded(queries, "query_id", "qcode")
     val c = coded(corpus, "neighbor_id", "ccode")
@@ -878,22 +878,20 @@ object VectorFns {
     val (cents, rcb) = ivfPqCodebooks(corpus, idCol, vecCol, kCells, k, m, dims)
     val centsLit = typedLit(cents)
     val c = Fence.guard(Fence.guard(Fence.guard(
-        corpus.select(col(idCol).as("neighbor_id"), quantizeFast(col(vecCol)).as("cv"), Fence.col))
+        corpus.select(col(idCol).as("neighbor_id"), quantizeFast(col(vecCol)).as("cv")))
       .select(col("neighbor_id"), col("cv"),
-        element_at(ivfProbesFast(col("cv"), centsLit, 1), 1).as("cid"), Fence.col))
+        element_at(ivfProbesFast(col("cv"), centsLit, 1), 1).as("cid")))
       .select(col("neighbor_id"), col("cid"),
-        vecSubFast(col("cv"), element_at(centsLit, col("cid").cast("int") + 1)).as("rv"),
-        Fence.col))
+        vecSubFast(col("cv"), element_at(centsLit, col("cid").cast("int") + 1)).as("rv")))
       .select(col("neighbor_id"), col("cid"), pqEncode(col("rv"), rcb).as("codes"))
     val q = Fence.guard(Fence.guard(
-        queries.select(col(idCol).as("query_id"), quantizeFast(col(vecCol)).as("qv"), Fence.col))
+        queries.select(col(idCol).as("query_id"), quantizeFast(col(vecCol)).as("qv")))
       .select(col("query_id"), col("qv"),
-        ivfProbesFast(col("qv"), centsLit, nprobe).as("__ps"), Fence.col))
+        ivfProbesFast(col("qv"), centsLit, nprobe).as("__ps")))
       .select(col("query_id"), col("qv"), explode(col("__ps")).as("cid"))
     val q2 = Fence.guard(
         q.select(col("query_id"), col("cid"),
-          vecSubFast(col("qv"), element_at(centsLit, col("cid").cast("int") + 1)).as("qrv"),
-          Fence.col))
+          vecSubFast(col("qv"), element_at(centsLit, col("cid").cast("int") + 1)).as("qrv")))
       .select(col("query_id"), col("cid"), pqDistTable(col("qrv"), rcb).as("dtab"))
     val scored = q2.join(c, Seq("cid")).filter(col("query_id") =!= col("neighbor_id"))
       .select(col("query_id"), col("neighbor_id"),
@@ -959,9 +957,9 @@ object VectorFns {
     // minhashCandidates)
     val p = if (planes > 0) planes else autoPlanes(memoCount(df))
     val e = Fence.guard(Fence.guard(df
-        .select(col(idCol).as("id"), quantizeFast(col(vecCol)).as("qv"), Fence.col))
+        .select(col(idCol).as("id"), quantizeFast(col(vecCol)).as("qv")))
       .select(col("id"), col("qv"), qdotFast(col("qv"), col("qv")).as("nrm"),
-        lshBucketsFast(col("qv"), tables, p).as("__bks"), Fence.col))
+        lshBucketsFast(col("qv"), tables, p).as("__bks")))
       .select(col("id"), col("qv"), col("nrm"),
         posexplode(col("__bks")).as(Seq("tbl", "bucket")))
       .repartition(col("tbl"), col("bucket"))
@@ -1006,9 +1004,9 @@ object VectorFns {
     val k = if (kCentroids > 0) kCentroids else autoCentroidCount(memoCount(corpus))
     val cents = typedLit(ivfCentroids(corpus, idCol, vecCol, k))
     val a = Fence.guard(Fence.guard(
-        corpus.select(col(idCol).as("id"), quantizeFast(col(vecCol)).as("qv"), Fence.col))
+        corpus.select(col(idCol).as("id"), quantizeFast(col(vecCol)).as("qv")))
       .select(col("id"), col("qv"),
-        element_at(ivfProbesFast(col("qv"), cents, 1), 1).as("cid"), Fence.col))
+        element_at(ivfProbesFast(col("qv"), cents, 1), 1).as("cid")))
       .select(col("id"), col("qv"), col("cid"),
         qdotFast(col("qv"), col("qv")).as("nrm"))
       .repartition(col("cid"))
@@ -1039,9 +1037,9 @@ object VectorFns {
       tables: Int = 8, planes: Int = 0): DataFrame = {
     val p = if (planes > 0) planes else autoPlanes(memoCount(df))
     val e = Fence.guard(Fence.guard(df
-        .select(col(idCol).as("id"), quantizeFast(col(vecCol)).as("qv"), Fence.col))
+        .select(col(idCol).as("id"), quantizeFast(col(vecCol)).as("qv")))
       .select(col("id"), col("qv"), qdotFast(col("qv"), col("qv")).as("nrm"),
-        lshBucketsFast(col("qv"), tables, p).as("__bks"), Fence.col))
+        lshBucketsFast(col("qv"), tables, p).as("__bks")))
       .select(col("id"), col("qv"), col("nrm"), col("__bks"),
         posexplode(col("__bks")).as(Seq("tbl", "bucket")))
       .repartition(col("tbl"), col("bucket"))

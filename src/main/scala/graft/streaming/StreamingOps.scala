@@ -1182,7 +1182,7 @@ object StreamingOps {
       import graft.functions.{DedupFns, Fence, TextFns}
       val g = Fence.guard(
           batch.select(col(idCol).as("doc_id"),
-            TextFns.tokensFast(col(textCol)).as("__toks"), Fence.col))
+            TextFns.tokensFast(col(textCol)).as("__toks")))
         .filter(size(col("__toks")) >= 8)
         .select(col("doc_id"),
           posexplode(DedupFns.wordNgramsPositional(col("__toks"), 8)).as(Seq("pos", "__gram")))
@@ -1259,7 +1259,7 @@ object StreamingOps {
       import graft.functions.{DedupFns, Fence, TextFns}
       val base = Fence.guard(
           batch.select(col(idCol).as("id"), col(textCol).as("text"),
-            TextFns.tokensFast(col(textCol)).as("__toks"), Fence.col))
+            TextFns.tokensFast(col(textCol)).as("__toks")))
       // docs too short to shingle have no bands: they cannot collide
       // with anything, so they pass through as automatic survivors
       // (dropping them would be data loss, not dedup)
@@ -1363,9 +1363,9 @@ object StreamingOps {
       // this dedup both copies would survive and double the history
       val sigs = Fence.guard(Fence.guard(
           batch.dropDuplicates(idCol)
-            .select(col(idCol).as("id"), VectorFns.quantizeFast(col(vecCol)).as("qv"), Fence.col))
+            .select(col(idCol).as("id"), VectorFns.quantizeFast(col(vecCol)).as("qv")))
         .select(col("id"), col("qv"),
-          element_at(VectorFns.ivfProbesFast(col("qv"), cents, 1), 1).as("cid"), Fence.col))
+          element_at(VectorFns.ivfProbesFast(col("qv"), cents, 1), 1).as("cid")))
         .select(col("id"), col("qv"), col("cid"),
           VectorFns.qdotFast(col("qv"), col("qv")).as("nrm"))
         .cache()
@@ -1447,8 +1447,8 @@ object StreamingOps {
       import graft.functions.{DedupFns, Fence, TextFns}
       val docs = batch.select(col(idCol).as("id"), col(textCol).as("text"))
       val grams = Fence.guard(Fence.guard(
-          docs.select(col("id"), TextFns.tokensFast(col("text")).as("__toks"), Fence.col))
-        .select(col("id"), DedupFns.wordNgramsFast(col("__toks"), 4).as("__grams"), Fence.col))
+          docs.select(col("id"), TextFns.tokensFast(col("text")).as("__toks")))
+        .select(col("id"), DedupFns.wordNgramsFast(col("__toks"), 4).as("__grams")))
         .select(col("id"), explode(col("__grams")).as("g"))
       val mightHit =
         org.apache.spark.sql.GraftBridge.bloomMightContain(bloomBytes, xxhash64(col("g")))

@@ -84,6 +84,20 @@ object GraftBridge {
       case _ => ()
     }
 
+  /** A frame over `f` applied to `df`'s analyzed plan, in `df`'s
+    * session — how a custom logical node (graft.functions.GraftFence)
+    * enters the Dataset API.
+    */
+  def withPlan(df: Dataset[_])(
+      f: catalyst.plans.logical.LogicalPlan => catalyst.plans.logical.LogicalPlan): DataFrame = {
+    val ds = df.asInstanceOf[classic.Dataset[_]]
+    classic.Dataset.ofRows(ds.sparkSession, f(ds.logicalPlan))
+  }
+
+  /** The planner strategies of `df`'s session, extensions included. */
+  def plannerStrategies(df: Dataset[_]): Seq[execution.SparkStrategy] =
+    df.asInstanceOf[classic.Dataset[_]].sparkSession.sessionState.planner.strategies
+
   /** Apply an extensions object's injected functions to a session's
     * FunctionRegistry — what session construction does with
     * `spark.sql.extensions`, callable from tests (the conf itself is

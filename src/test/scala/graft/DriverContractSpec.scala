@@ -109,6 +109,22 @@ class DriverContractSpec extends AnyFunSuite {
       s"session-keyed memo maps outside SessionMemo: ${hits.filterNot(_ == "SessionMemo.scala")}")
   }
 
+  test("no partition-seeded randomness: no rand(/randn( or spark_partition_id in src/main") {
+    // their values depend on how rows fall into partitions, so a result
+    // built on them changes with the partition count
+    // (PartitionInvarianceSpec's contract)
+    implicit val codec: scala.io.Codec = scala.io.Codec.UTF8
+    val banned = "\\b(randn?\\s*\\(|spark_partition_id)".r
+    val hits = sourceFiles.filter(_.getPath.startsWith(s"src${java.io.File.separator}main"))
+      .flatMap { f =>
+        val src = scala.io.Source.fromFile(f)
+        try src.getLines().zipWithIndex.collect {
+          case (line, i) if banned.findFirstIn(line).isDefined => s"${f.getPath}:${i + 1}: ${line.trim}"
+        }.toList finally src.close()
+      }
+    assert(hits.isEmpty, s"partition-seeded randomness in src/main:\n${hits.mkString("\n")}")
+  }
+
   test("strict plan gate: committed audit snapshot covers every query and all fact multi-scans are adjudicated") {
     // the whole-suite final-plan audit as a REGRESSION gate inside sbt
     // test: the committed snapshot (regenerated each round alongside

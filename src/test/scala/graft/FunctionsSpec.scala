@@ -468,45 +468,80 @@ class FunctionsSpec extends SparkSpecBase {
     assert(q.forall(x => x >= -20 && x <= 70))
   }
 
-  test("Fence.keepAll: identity on rows/schema; its filter survives optimization in a pruning branch") {
-    // NOT a literal Seq: ConvertToLocalRelation evaluates filters over
-    // LocalRelation at optimization time, which would erase the fence
-    // before the property under test even applies. Range-backed input
-    // behaves like a real scan.
+  private def fences(df: org.apache.spark.sql.DataFrame): Seq[GraftFence] =
+    df.queryExecution.optimizedPlan.collect { case f: GraftFence => f }
+
+  test("Fence.keepAll: identity on rows/schema; the fence survives optimization in a pruning branch") {
+    // Range-backed input, not a literal Seq, so the frame optimizes like
+    // a real scan (ConvertToLocalRelation folds plans over a Seq)
     val base = spark.range(1, 4).toDF("k")
       .withColumn("s", when(col("k") =!= 2, concat(lit("x"), col("k"))))
       .withColumn("v", col("k") * 10)
     val fenced = Fence.keepAll(base)
-    // identity: same schema, same rows (nulls included — xxhash64 is
-    // non-null total, so the predicate is true for every row)
+    // identity: same schema, same rows (nulls included)
     assert(fenced.schema == base.schema)
     assert(fenced.collect().toSet == base.collect().toSet)
     // the load-bearing property: a consumer that uses only ONE column
     // still carries all of them below the fence — the optimized plan
-    // keeps the all-columns hash filter (no rule folds the >=
-    // Long.MinValue tautology), so pruning cannot specialize the
-    // shared subtree
+    // keeps the node, referencing every column, so pruning cannot
+    // specialize the shared subtree
     val pruningConsumer = fenced.select(sum(col("v")).as("t"))
     val opt = pruningConsumer.queryExecution.optimizedPlan.toString
-    assert(opt.contains("xxhash64"), opt)
+    val fs = fences(pruningConsumer)
+    assert(fs.size == 1, opt)
+    assert(fs.head.keep.map(_.name) == Seq("k", "s", "v"), opt)
     // the consumer uses only v, yet s's expression (the concat) still
     // computes below the fence — pruning could not specialize it
     assert(opt.contains("concat"), s"unused column's expression pruned through the fence:\n$opt")
+    // planned as its child: the node never reaches the physical plan
+    assert(!pruningConsumer.queryExecution.executedPlan.toString.contains("GraftFence"))
   }
 
-  test("Fence.keepAllPinned: the fence stays ABOVE a repartition and survives optimization") {
+  test("Fence.keepAll: the fence stays ABOVE a repartition and survives optimization") {
     val base = spark.range(1, 8).toDF("k").withColumn("v", col("k") * 2)
-    val fenced = Fence.keepAllPinned(base.repartition(col("k")))
+    val fenced = Fence.keepAll(base.repartition(col("k")))
     assert(fenced.collect().toSet == base.collect().toSet)
-    val opt = fenced.select(sum(col("v")).as("t")).queryExecution.optimizedPlan.toString
-    // survives (a rand()-based disjunct is range-folded away and the
-    // whole fence erased — spark_partition_id() is not), and is NOT
-    // pushed below the repartition: plan order must be
-    // Filter → RepartitionByExpression
-    assert(opt.contains("SPARK_PARTITION_ID"), opt)
-    val fIdx = opt.indexOf("Filter")
-    val rIdx = opt.indexOf("RepartitionByExpression")
-    assert(fIdx >= 0 && rIdx >= 0 && fIdx < rIdx,
+    val consumer = fenced.select(sum(col("v")).as("t"))
+    val opt = consumer.queryExecution.optimizedPlan.toString
+    // survives, and is NOT pushed below the repartition: the node's
+    // child is the RepartitionByExpression itself
+    val fs = fences(consumer)
+    assert(fs.size == 1 &&
+      fs.head.child.isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.RepartitionByExpression],
       s"fence was pushed through the repartition:\n$opt")
+  }
+
+  test("Fence.guard: a filter over a guarded projection stays above the node; the projection evaluates once") {
+    // sha2 stands in for an expensive signature; the filter reads it
+    val proj = spark.range(1, 50).toDF("k")
+      .select(col("k"), sha2(col("k").cast("string"), 256).as("h"))
+    def consumer(df: org.apache.spark.sql.DataFrame) =
+      df.filter(substring(col("h"), 1, 1) =!= "0").select(col("k"), col("h"))
+    // unfenced, Catalyst substitutes the alias into the pushed filter:
+    // the signature expression appears twice — what the fence prevents
+    val bare = consumer(proj).queryExecution.optimizedPlan.toString
+    assert("sha2\\(".r.findAllIn(bare).size == 2, bare)
+    val fenced = consumer(Fence.guard(proj))
+    val opt = fenced.queryExecution.optimizedPlan
+    assert("sha2\\(".r.findAllIn(opt.toString).size == 1, opt.toString)
+    val filterOverFence = opt.collect {
+      case f: org.apache.spark.sql.catalyst.plans.logical.Filter => f.child
+    }
+    assert(filterOverFence.size == 1 && filterOverFence.head.isInstanceOf[GraftFence], opt.toString)
+    assert(fenced.collect().toSet == consumer(proj).collect().toSet)
+  }
+
+  test("a session without graft.GraftExtensions fails loudly on a fenced frame, never drops the fence") {
+    val bare = org.apache.spark.sql.BareSessionBridge.session(spark.sparkContext)
+    // building a fence in such a session fails at once, naming the fix
+    val e1 = intercept[IllegalStateException](Fence.guard(bare.range(3).toDF("k")))
+    assert(e1.getMessage.contains("graft.GraftExtensions"), e1.getMessage)
+    // a fenced plan carried into such a session fails at planning
+    val fenced = Fence.keepAll(spark.range(3).toDF("k"))
+    val e2 = intercept[Throwable](
+      org.apache.spark.sql.BareSessionBridge.executedPlanIn(bare, fenced))
+    val msgs = Iterator.iterate[Throwable](e2)(_.getCause).takeWhile(_ != null)
+      .map(t => String.valueOf(t.getMessage)).toSeq
+    assert(msgs.exists(_.contains("GraftFence")), msgs.mkString("\n"))
   }
 }

@@ -83,9 +83,9 @@ class PartitionInvarianceSpec extends SparkSpecBase {
     // rank-window inverted index — window frames and partial merges
     // must not notice reducer counts or scan splits
     "q_funnel", "q_retention", "q_bigram_lm", "q_inverted_index",
-    // the pinned-fence privacy gates LEXICALLY reference
-    // spark_partition_id() (in a never-true disjunct — this pins that
-    // it can never leak into results), the HLL union contract must be
+    // the privacy release gates share one fenced (type, band)
+    // repartition between the group aggregate and the release join
+    // (its width must not change their rows), the HLL union contract must be
     // register-merge-order independent, and the epoch plan's
     // DECIMAL(38,0) budget products ride partial-sum merges
     "q_kanon", "q_ldiv", "q_hll_rollup", "q_epoch_plan",
