@@ -2,7 +2,6 @@ package graft.functions
 
 import org.apache.spark.sql.{Column, DataFrame, Dataset, Row}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types._
 
 /** Multimodal column plumbing: image/audio/video payloads as opaque
   * `binary` columns with typed metadata alongside.
@@ -14,16 +13,6 @@ import org.apache.spark.sql.types._
   * metadata extraction as codegen'd expressions) is real and tested.
   */
 object Multimodal {
-
-  /** Canonical schema for a multimodal asset table. */
-  val assetSchema: StructType = StructType(Seq(
-    StructField("asset_id", LongType, nullable = false),
-    StructField("media_type", StringType, nullable = false),
-    StructField("payload", BinaryType, nullable = true),
-    StructField("meta_width", IntegerType, nullable = true),
-    StructField("meta_height", IntegerType, nullable = true),
-    StructField("meta_duration_ms", LongType, nullable = true)
-  ))
 
   /** Pure-expression metadata over a binary payload: byte length, magic
     * bytes (first 4, lowercase hex), sha256 content address.

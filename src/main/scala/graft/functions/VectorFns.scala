@@ -3,6 +3,7 @@ package graft.functions
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.operators.Iterate
 
 /** Vector similarity over embedding columns (Array[Float]).
   *
@@ -472,9 +473,10 @@ object VectorFns {
     * production rule k = ⌈√n⌉ ≈ 10⁵, d = 64 — exactly the
     * plan-literal bottleneck [[ivfTopK2]] removed from search). Here
     * the fine centroids live as a checkpointed k-row RELATION
-    * (fcid, fv) — no driver collect, no k·d literal, superseded
-    * round checkpoints freed eagerly (the pageRank discipline) — and
-    * assignment has two shapes:
+    * (fcid, fv) — no driver collect, no k·d literal; a probing loop
+    * under [[graft.operators.Iterate.probe]] cuts it every round and
+    * frees the superseded round at once — and assignment has two
+    * shapes:
     *
     *  - `assignProbes = 0` (default — FULL assignment): the relation
     *    aggregates into a ONE-ROW array<array> frame (fcid order)
@@ -511,7 +513,7 @@ object VectorFns {
     // initial fine relation: the SAME deterministic (md5(id), id) sample
     // as ivfCentroids(k), fcid = position in sample order — funneled
     // through TakeOrderedAndProject, never a full sort; k rows total
-    var fine = corpus
+    val fine0 = corpus
       .select(quantizeFast(col(vecCol)).as("fv"), col(idCol).cast("string").as("__sid"))
       .filter(col("fv").isNotNull)
       .orderBy(md5(col("__sid")), col("__sid"))
@@ -519,10 +521,6 @@ object VectorFns {
       .withColumn("fcid", row_number().over(
         Window.orderBy(md5(col("__sid")), col("__sid"))).cast("long") - 1)
       .select(col("fcid"), col("fv"))
-      .localCheckpoint(true)
-    if (fine.isEmpty)
-      return q.limit(0).select(lit(0L).as("cid"),
-        lit(0L).as("n_members"), lit(0L).as("inertia"))
     // the relation as a one-row array frame, fcid order — k·d longs of
     // broadcast DATA standing where kmeansTrain puts a plan literal
     def arr1(fineRel: DataFrame): DataFrame =
@@ -561,8 +559,7 @@ object VectorFns {
       else assignTrunc(fineRel, math.min(assignProbes, k1)).select(col("cid"), col("qv"))
     // one corpus count, reused by every round's guard and the final one
     val corpusN = if (assignProbes > 0) q.count() else -1L
-    var r = 0
-    while (r < rounds) {
+    Iterate.probe(fine0, rounds) { (fine, round) =>
       val perDim0 = assigned(fine)
         .select(col("cid"), posexplode(col("qv")).as(Seq("dim", "v")))
         .groupBy("cid", "dim")
@@ -572,16 +569,16 @@ object VectorFns {
       // guard below cannot see THIS round's membership — fine centroids
       // move between rounds, so a row can silently drop out of a
       // round's means (biasing the centroids) yet still reach a
-      // centroid in the final pass. Checkpointing the k·d per-dim
-      // frame makes the coverage read free of a second assignment
+      // centroid in the final pass. Cutting the k·d per-dim frame for
+      // the round makes the coverage read free of a second assignment
       // join; n at dim 0 counts every row the round's means saw.
-      val perDim = if (assignProbes > 0) perDim0.localCheckpoint(true) else perDim0
+      val perDim = if (assignProbes > 0) round.cut(perDim0) else perDim0
       if (assignProbes > 0) {
         val aRow = perDim.filter(col("dim") === 0).agg(sum(col("n"))).collect()(0)
         val sawN = if (aRow.isNullAt(0)) 0L else aRow.getLong(0)
         require(sawN == corpusN,
-          s"kmeansTrain2(assignProbes=$assignProbes): round $r means saw only $sawN of " +
-            s"$corpusN corpus rows — some rows' probed coarse cells contain no fine " +
+          s"kmeansTrain2(assignProbes=$assignProbes): round ${round.index - 1} means saw only " +
+            s"$sawN of $corpusN corpus rows — some rows' probed coarse cells contain no fine " +
             "centroid THIS round, so they were silently dropped from the round's means. " +
             "Raise assignProbes or use assignProbes=0 (full assignment).")
       }
@@ -589,50 +586,50 @@ object VectorFns {
         .groupBy(col("cid"))
         .agg(transform(array_sort(collect_list(struct(col("dim"), col("mv")))),
           x => x.getField("mv")).as("nv"))
-      val next = fine
+      fine
         .join(broadcast(means), fine("fcid") === means("cid"), "left")
         .select(col("fcid"), coalesce(col("nv"), col("fv")).as("fv"))
-        .localCheckpoint(true)
-      org.apache.spark.sql.GraftBridge.freeLocalCheckpoint(fine)
-      if (assignProbes > 0) org.apache.spark.sql.GraftBridge.freeLocalCheckpoint(perDim)
-      fine = next
-      r += 1
-    }
-    // final assignment + exact integer inertia — the literal loop's
-    // own final block, with the attached array standing in for the
-    // literal (full path); the truncated path already carries d²
-    if (assignProbes <= 0) {
-      val cvec = element_at(col("__cents"), (col("cid") + 1).cast("int"))
-      assignFull(fine)
-        .withColumn("__d", vecSubFast(col("qv"), cvec))
-        .withColumn("__d2", qdotFast(col("__d"), col("__d")))
-        .groupBy(col("cid").cast("long").as("cid"))
-        .agg(count(lit(1)).as("n_members"), sum(col("__d2")).as("inertia"))
-    } else {
-      val res = assignTrunc(fine, math.min(assignProbes, k1))
-        .groupBy(col("cid"))
-        .agg(count(lit(1)).as("n_members"), sum(col("d2")).as("inertia"))
-        .localCheckpoint(true)
-      // ROW-LOSS guard (ADVICE r15; per-round twin above — ADVICE r16):
-      // the truncated path's routing join (corpus rows meet fine
-      // centroids THROUGH their probed coarse cells) is inner — a row
-      // whose probed cells contain zero fine centroids silently
-      // vanishes from the means and from these totals, which is row
-      // LOSS, not approximation. Same medicine as the pcaPower
-      // ragged-corpus guard: compare assigned coverage to the corpus
-      // (counted once, above the loop) on the k-row final frame and
-      // fail loudly with the fix (more probes, or the full-assignment
-      // path, which is structurally complete).
-      val aRow = res.agg(sum(col("n_members"))).collect()(0)
-      val assignedN = if (aRow.isNullAt(0)) 0L else aRow.getLong(0)
-      require(assignedN == corpusN,
-        s"kmeansTrain2(assignProbes=$assignProbes): only $assignedN of $corpusN corpus " +
-          "rows reached a fine centroid — some rows' probed coarse cells contain no " +
-          "fine centroid, so they were silently DROPPED from training and the totals. " +
-          "Raise assignProbes (cells probed per row) or use assignProbes=0 (full " +
-          "assignment, structurally complete).")
-      res
-    }
+    } { run =>
+      val fine = run.state
+      // final assignment + exact integer inertia — the literal loop's
+      // own final block, with the attached array standing in for the
+      // literal (full path); the truncated path already carries d².
+      // An empty corpus leaves the k-row relation empty every round.
+      if (fine.isEmpty)
+        q.limit(0).select(lit(0L).as("cid"), lit(0L).as("n_members"), lit(0L).as("inertia"))
+      else if (assignProbes <= 0) {
+        val cvec = element_at(col("__cents"), (col("cid") + 1).cast("int"))
+        assignFull(fine)
+          .withColumn("__d", vecSubFast(col("qv"), cvec))
+          .withColumn("__d2", qdotFast(col("__d"), col("__d")))
+          .groupBy(col("cid").cast("long").as("cid"))
+          .agg(count(lit(1)).as("n_members"), sum(col("__d2")).as("inertia"))
+      } else {
+        val res = assignTrunc(fine, math.min(assignProbes, k1))
+          .groupBy(col("cid"))
+          .agg(count(lit(1)).as("n_members"), sum(col("d2")).as("inertia"))
+          .localCheckpoint(true)
+        // ROW-LOSS guard (ADVICE r15; per-round twin above — ADVICE r16):
+        // the truncated path's routing join (corpus rows meet fine
+        // centroids THROUGH their probed coarse cells) is inner — a row
+        // whose probed cells contain zero fine centroids silently
+        // vanishes from the means and from these totals, which is row
+        // LOSS, not approximation. Same medicine as the pcaPower
+        // ragged-corpus guard: compare assigned coverage to the corpus
+        // (counted once, above the loop) on the k-row final frame and
+        // fail loudly with the fix (more probes, or the full-assignment
+        // path, which is structurally complete).
+        val aRow = res.agg(sum(col("n_members"))).collect()(0)
+        val assignedN = if (aRow.isNullAt(0)) 0L else aRow.getLong(0)
+        require(assignedN == corpusN,
+          s"kmeansTrain2(assignProbes=$assignProbes): only $assignedN of $corpusN corpus " +
+            "rows reached a fine centroid — some rows' probed coarse cells contain no " +
+            "fine centroid, so they were silently DROPPED from training and the totals. " +
+            "Raise assignProbes (cells probed per row) or use assignProbes=0 (full " +
+            "assignment, structurally complete).")
+        res
+      }
+    }._1
   }
 
   /** Top principal direction of the embedding corpus by FIXED-round

@@ -23,13 +23,6 @@ object Relational {
     df.withColumn("branch", labeled)
   }
 
-  /** Deterministic top-k: full sort is avoided — Catalyst plans
-    * orderBy+limit as TakeOrderedAndProject (per-partition heaps + a
-    * single driver merge of k rows).
-    */
-  def topK(df: DataFrame, k: Int, order: Column*): DataFrame =
-    df.orderBy(order.toIndexedSeq: _*).limit(k)
-
   /** Deterministic global shuffle order: pos = rank of (md5(id), id)
     * over the whole dataset — the reproducible "shuffle the corpus" a
     * training run needs, with zero RNG state. NOT a global sort: the
@@ -237,10 +230,8 @@ object Relational {
     *
     * Driver involvement per round is one star-shape test (a count) —
     * exact, no signature hashing — so total driver actions are
-    * O(log d), not O(d). localCheckpoint (not cache) per round: caching
-    * alone leaves the logical plan growing by joins per round — the
-    * exploding plan tree OOMs the DRIVER during analysis long before
-    * the data does.
+    * O(log d), not O(d). A probing loop under [[Iterate.probe]]: the
+    * edge state is cut every round and each superseded round freed.
     */
   def connectedComponents(pairs: DataFrame, srcCol: String, dstCol: String,
       maxRounds: Int = 30): DataFrame =
@@ -256,12 +247,10 @@ object Relational {
     val nodes = raw.select(col("u").as("id")).union(raw.select(col("v").as("id")))
       .distinct().localCheckpoint(true)
     // canonical a < b; self-loops carry no connectivity
-    var e = raw.filter(col("u") =!= col("v"))
+    val canon = raw.filter(col("u") =!= col("v"))
       .select(least(col("u"), col("v")).as("a"), greatest(col("u"), col("v")).as("b"))
-      .distinct().localCheckpoint(true)
-    var rounds = 0
-    var star = isStar(e)
-    while (!star && rounds < maxRounds) {
+      .distinct()
+    Iterate.probe(canon, maxRounds, isStar) { (e, _) =>
       // LARGE-STAR: for each node u, connect every strictly-larger
       // neighbor v to m(u) = min(N(u) ∪ {u}). Output stays canonical:
       // m(u) <= u < v.
@@ -277,29 +266,19 @@ object Relational {
       // all smaller neighbors (and b itself) to m(b) = min of them.
       val sMins = ls.groupBy("b").agg(min(col("a")).as("m"))
       val withMin = ls.join(sMins, "b")
-      val prev = e
-      e = withMin.select(col("m").as("a"), col("a").as("b")).filter(col("a") =!= col("b"))
+      withMin.select(col("m").as("a"), col("a").as("b")).filter(col("a") =!= col("b"))
         .union(withMin.select(col("m").as("a"), col("b")))
         .distinct()
-        .localCheckpoint(true)
-      // the new round's checkpoint is eager, so the previous round's
-      // blocks are dead the moment it returns — free them NOW rather
-      // than waiting for a driver GC that a 128 GiB heap may never run
-      // (the blocks otherwise accumulate across rounds AND across
-      // queries, decaying every later job in the session)
-      org.apache.spark.sql.GraftBridge.freeLocalCheckpoint(prev)
-      star = isStar(e)
-      rounds += 1
+    } { run =>
+      if (!run.stopped)
+        throw new IllegalStateException(
+          s"connectedComponents did not converge in $maxRounds star rounds")
+      // At the star fixpoint every edge is (root, member); roots and
+      // isolated nodes label themselves.
+      nodes
+        .join(run.state.select(col("b").as("id"), col("a").as("root")), Seq("id"), "left")
+        .select(col("id"), coalesce(col("root"), col("id")).as("cluster_root"))
     }
-    if (!star)
-      throw new IllegalStateException(
-        s"connectedComponents did not converge in $maxRounds star rounds")
-    // At the star fixpoint every edge is (root, member); roots and
-    // isolated nodes label themselves.
-    val labels = nodes
-      .join(e.select(col("b").as("id"), col("a").as("root")), Seq("id"), "left")
-      .select(col("id"), coalesce(col("root"), col("id")).as("cluster_root"))
-    (labels, rounds)
   }
 
   /** Converged iff the edge set is a DISJOINT union of stars, which
@@ -325,26 +304,6 @@ object Relational {
     r.isNullAt(0) || (r.getLong(0) <= 1 && r.getInt(1) == 0) // empty edge set is a star fixpoint
   }
 
-  /** Fixed-iteration integer PageRank over an undirected pair list —
-    * the centrality score a dedup pipeline uses to pick cluster
-    * representatives (or to spot template hubs) on the near-dup graph.
-    *
-    * All-arithmetic-is-integer so the result is engine-portable: pr is
-    * scaled to micro-units (pr0 = 1,000,000), each node contributes
-    * `pr div deg` to every neighbor, and the damping update is
-    * pr' = 150000 + (850 * sum_contribs) div 1000 (d = 0.85 in exact
-    * milli-units). Fixed `iters` rather than convergence detection
-    * keeps the oracle expressible as a non-recursive unrolled query.
-    *
-    * Scale shape: edges materialize ONCE (localCheckpoint, partitioned
-    * on src — they are referenced every iteration, so without the
-    * materialization the upstream pair mining would re-run per
-    * iteration); each iteration is one equi-join + one partial-agg
-    * shuffle on dst. Unlike connectedComponents there is no per-round
-    * driver count, so the whole fixed-depth loop stays ONE lazy plan —
-    * plan depth is bounded by `iters`, and periodic lineage truncation
-    * (every 8 rounds) only kicks in for deep runs.
-    */
   /** Per-node triangle counts over an undirected pair list — the
     * clustering-coefficient numerator, and on a near-dup graph the
     * "is this cluster a clique or a chain?" diagnostic that decides
@@ -359,8 +318,8 @@ object Relational {
     * three corners then get credit via one explode. Both the wedge join
     * (on apex) and the closing join (on the (lo, hi) edge) are
     * equi-joins — never all-pairs.
-    */
-  /** @param state optional prebuilt graph state shared across the
+    *
+    * @param state optional prebuilt graph state shared across the
     *   graph family: (symmetric-distinct self-loop-free edge list as
     *   (src, dst), per-node degree as (id, deg)) — both already
     *   materialized (checkpointed) by the caller. When present, the
@@ -415,48 +374,35 @@ object Relational {
       .groupBy("id").agg(count(lit(1)).as("n_tri"))
   }
 
-  /** @param state see [[triangleCounts]] — prebuilt (symmetric edges
+  /** Fixed-iteration integer PageRank over an undirected pair list —
+    * the centrality score a dedup pipeline uses to pick cluster
+    * representatives (or to spot template hubs) on the near-dup graph.
+    *
+    * All-arithmetic-is-integer so the result is engine-portable: pr is
+    * scaled to micro-units (pr0 = 1,000,000), each node contributes
+    * `pr div deg` to every neighbor, and the damping update is
+    * pr' = 150000 + (850 * sum_contribs) div 1000 (d = 0.85 in exact
+    * milli-units). Fixed `iters` rather than convergence detection
+    * keeps the oracle expressible as a non-recursive unrolled query.
+    * It is [[personalizedPageRank]] with every node a seed.
+    *
+    * Scale shape: edges materialize ONCE ([[symEdges]], partitioned
+    * on src — they are referenced every iteration, so without the
+    * materialization the upstream pair mining would re-run per
+    * iteration); each iteration is one equi-join + one partial-agg
+    * shuffle on dst. Unlike connectedComponents there is no per-round
+    * driver count, so the loop is an [[Iterate.walk]]: plan depth is
+    * bounded by `iters`, and the lineage cut (every
+    * [[Iterate.WalkCadence]] rounds) only kicks in for deep runs.
+    * Self-loops are dropped: a node whose only edge is a self-loop
+    * gets no row.
+    *
+    * @param state see [[triangleCounts]] — prebuilt (symmetric edges
     *   partitioned by src, (id, deg)), both checkpointed by the caller.
     */
   def pageRank(pairs: DataFrame, srcCol: String, dstCol: String, iters: Int = 3,
-      state: Option[(DataFrame, DataFrame)] = None): DataFrame = {
-    // (id, deg) materializes once too: every iteration joins against it
-    // (referencing the PREVIOUS rank twice instead would double the
-    // plan per round — exponential), and every iteration's reference
-    // then reads the same checkpointed leaf
-    val (edges, deg) = state.getOrElse {
-      val e = pairs.select(col(srcCol).as("src"), col(dstCol).as("dst"))
-        .union(pairs.select(col(dstCol).as("src"), col(srcCol).as("dst")))
-        .distinct()
-        .repartition(col("src"))
-        .localCheckpoint(true)
-      (e, e.groupBy(col("src").as("id")).agg(count(lit(1)).as("deg"))
-        .localCheckpoint(true))
-    }
-    var pr = deg.select(col("id"), lit(1000000L).as("pr"), col("deg"))
-    var lastCut: DataFrame = null // the live lineage-truncation checkpoint
-    var it = 0
-    while (it < iters) {
-      val contribs = edges
-        .join(pr.select(col("id").as("__src"), expr("pr div deg").as("__c")),
-          col("src") === col("__src"))
-        .groupBy(col("dst").as("id"))
-        .agg(sum(col("__c")).as("__s"))
-      pr = deg.join(contribs, Seq("id"), "left")
-        .select(col("id"),
-          (lit(150000L) + expr("(850 * coalesce(__s, 0)) div 1000")).as("pr"),
-          col("deg"))
-      if (it % 8 == 7 && it != iters - 1) {
-        pr = pr.localCheckpoint(true)
-        // the fresh (eager) cut supersedes the previous one — free its
-        // blocks immediately instead of leaving them to driver GC
-        if (lastCut != null) org.apache.spark.sql.GraftBridge.freeLocalCheckpoint(lastCut)
-        lastCut = pr
-      }
-      it += 1
-    }
-    pr.select(col("id"), col("pr").as("pr_micro"))
-  }
+      state: Option[(DataFrame, DataFrame)] = None): DataFrame =
+    seededWalk(pairs, srcCol, dstCol, lit(true), iters, state, "pr_micro")
 
   /** Personalized PageRank / random-walk-with-restart (Page et al.
     * 1999 §6 "personalized PageRank"; Jeh & Widom WWW'03): the teleport
@@ -470,47 +416,47 @@ object Relational {
     *   prₜ₊₁(v) = 150 000·[v ∈ S] + (850·Σ_{u→v} ⌊prₜ(u)/deg(u)⌋)div 1000
     * — floor division at each step, so both engines agree bit-for-bit.
     * Non-seed sinks hold mass 0 until reached; total mass decays where
-    * the graph leaks, exactly like the uniform variant. Scale shape is
-    * pageRank's: one checkpointed symmetric edge list, per round one
-    * src-keyed join + dst-keyed partial aggregate, rank state one row
-    * per node.
+    * the graph leaks, exactly like the uniform variant. Scale shape and
+    * lineage cuts are pageRank's: one checkpointed symmetric edge list,
+    * per round one src-keyed join + dst-keyed partial aggregate, rank
+    * state one row per node. Self-loops are dropped, as in pageRank.
     */
   def personalizedPageRank(pairs: DataFrame, srcCol: String, dstCol: String,
       seedPred: Column, iters: Int = 3,
-      state: Option[(DataFrame, DataFrame)] = None): DataFrame = {
-    // prebuilt state: the seed flag is a map-only column over the
-    // already-checkpointed degree leaf, so no fresh checkpoint is
-    // needed (see [[triangleCounts]] for the state contract)
-    val (edges, deg) = state match {
-      case Some((e, d)) => (e, d.withColumn("__seed", seedPred))
-      case None =>
-        val e = pairs.select(col(srcCol).as("src"), col(dstCol).as("dst"))
-          .union(pairs.select(col(dstCol).as("src"), col(srcCol).as("dst")))
-          .distinct()
-          .repartition(col("src"))
-          .localCheckpoint(true)
-        (e, e.groupBy(col("src").as("id")).agg(count(lit(1)).as("deg"))
-          .withColumn("__seed", seedPred)
-          .localCheckpoint(true))
+      state: Option[(DataFrame, DataFrame)] = None): DataFrame =
+    seededWalk(pairs, srcCol, dstCol, seedPred, iters, state, "ppr_micro")
+
+  /** The seed-gated PageRank recurrence behind [[pageRank]] and
+    * [[personalizedPageRank]], as (id, `outCol`).
+    */
+  private def seededWalk(pairs: DataFrame, srcCol: String, dstCol: String,
+      seedPred: Column, iters: Int, state: Option[(DataFrame, DataFrame)],
+      outCol: String): DataFrame = {
+    // (id, deg) materializes once too: every iteration joins against it
+    // (referencing the PREVIOUS rank twice instead would double the
+    // plan per round — exponential), and every iteration's reference
+    // then reads the same checkpointed leaf; the seed flag is a
+    // map-only column over it
+    val (edges, deg) = state.getOrElse {
+      val e = symEdges(pairs, srcCol, dstCol)
+      (e, e.groupBy(col("src").as("id")).agg(count(lit(1)).as("deg")).localCheckpoint(true))
     }
-    var pr = deg.select(col("id"),
+    val seeded = deg.withColumn("__seed", seedPred)
+    val pr0 = seeded.select(col("id"),
       when(col("__seed"), lit(1000000L)).otherwise(lit(0L)).as("pr"),
       col("deg"), col("__seed"))
-    var it = 0
-    while (it < iters) {
+    Iterate.walk(pr0, iters) { pr =>
       val contribs = edges
         .join(pr.select(col("id").as("__src"), expr("pr div deg").as("__c")),
           col("src") === col("__src"))
         .groupBy(col("dst").as("id"))
         .agg(sum(col("__c")).as("__s"))
-      pr = deg.join(contribs, Seq("id"), "left")
+      seeded.join(contribs, Seq("id"), "left")
         .select(col("id"),
           (when(col("__seed"), lit(150000L)).otherwise(lit(0L)) +
             expr("(850 * coalesce(__s, 0)) div 1000")).as("pr"),
           col("deg"), col("__seed"))
-      it += 1
-    }
-    pr.select(col("id"), col("pr").as("ppr_micro"))
+    }.select(col("id"), col("pr").as(outCol))
   }
 
   /** k-core peel (Seidman 1983 degeneracy cores), FIXED-round variant:
@@ -522,30 +468,19 @@ object Relational {
     * exit below returns the SAME result (monotonicity makes count
     * equality a sound set-fixpoint test) while skipping the no-op
     * re-materializations. Returns surviving (id, degree) — the k-core
-    * membership plus within-core degree.
+    * membership plus within-core degree. Self-loops are dropped.
     *
     * Scale shape: each round is one groupBy(degree) + two equi-joins
     * of the STATIC edge list against the (node, deg) table — never a
-    * growing frontier; per-round state is edge-list-bounded.
-    * Checkpoint discipline as pageRank: each round's eager cut frees
-    * the previous one immediately.
+    * growing frontier; per-round state is edge-list-bounded. A probing
+    * loop under [[Iterate.probe]]: each round's alive set is cut, and
+    * the cut it supersedes freed, before its count is read.
     */
   def kCore(pairs: DataFrame, srcCol: String, dstCol: String, k: Int,
       rounds: Int = 8, prebuiltSym: Option[DataFrame] = None): DataFrame = {
-    // one materialization of the symmetric edge list; the input pairs
-    // are canonicalized + deduped here so the expansion needs no
-    // second distinct over 2x the rows (prebuiltSym: the caller's
-    // already-checkpointed symmetric-distinct self-loop-free list —
-    // see [[triangleCounts]] for the shared-state contract)
-    val sym = prebuiltSym.getOrElse {
-      val edges = pairs
-        .select(least(col(srcCol), col(dstCol)).as("a"), greatest(col(srcCol), col(dstCol)).as("b"))
-        .filter(col("a") =!= col("b"))
-        .distinct()
-      edges.select(col("a").as("src"), col("b").as("dst"))
-        .union(edges.select(col("b").as("src"), col("a").as("dst")))
-        .localCheckpoint(true)
-    }
+    // prebuiltSym: the caller's already-checkpointed [[symEdges]] list
+    // (see [[triangleCounts]] for the shared-state contract)
+    val sym = prebuiltSym.getOrElse(symEdges(pairs, srcCol, dstCol))
     // PEEL STATE LIVES IN NODE SPACE, never edge space: the alive set
     // Aᵣ (Aᵣ₊₁ = nodes with ≥ k surviving-edge endpoints in Aᵣ) is
     // node-sized (≪ edges by the average degree), so each round is ONE
@@ -557,86 +492,66 @@ object Relational {
     // ~50x this formulation's wall time. (Billion-node graphs where
     // the alive set outgrows a broadcast: swap the probes to
     // shuffle_hash semi-joins; the recursion is unchanged.)
-    def aliveDeg(alive: DataFrame): DataFrame = {
-      val base =
-        if (alive == null) sym
-        else sym
-          .join(broadcast(alive.select(col("id").as("__ia"))),
+    def aliveDeg(alive: Option[DataFrame]): DataFrame = {
+      val base = alive.fold(sym) { a =>
+        sym
+          .join(broadcast(a.select(col("id").as("__ia"))),
             col("src") === col("__ia"), "left_semi")
-          .join(broadcast(alive.select(col("id").as("__ib"))),
+          .join(broadcast(a.select(col("id").as("__ib"))),
             col("dst") === col("__ib"), "left_semi")
+      }
       base.groupBy(col("src").as("id")).agg(count(lit(1)).as("degree"))
     }
-    var alive: DataFrame = null // round 0: every node alive
+    def peel(alive: Option[DataFrame]): DataFrame =
+      aliveDeg(alive).filter(col("degree") >= k).select(col("id"))
+    if (rounds <= 0) return aliveDeg(None)
+    // the count doubles as the SOUND fixpoint test: the peel is monotone
+    // (Aᵣ₊₁ ⊆ Aᵣ), so equal counts mean equal sets, and every later
+    // round would reproduce A verbatim — stopping early returns the
+    // bit-identical result of running all `rounds` rounds
     var prevCount = -1L
-    var r = 0
-    var converged = false
-    while (r < rounds && !converged) {
-      val next = aliveDeg(alive).filter(col("degree") >= k)
-        .select(col("id")).localCheckpoint(true)
-      // count doubles as the SOUND fixpoint test: the peel is monotone
-      // (Aᵣ₊₁ ⊆ Aᵣ), so equal counts mean equal sets, and every later
-      // round would reproduce A verbatim — stopping early returns the
-      // bit-identical result of running all `rounds` rounds
-      val c = next.count()
-      if (alive != null) org.apache.spark.sql.GraftBridge.freeLocalCheckpoint(alive)
-      alive = next
-      converged = c == prevCount
+    def sameCount(alive: DataFrame): Boolean = {
+      val c = alive.count()
+      val same = c == prevCount
       prevCount = c
-      r += 1
+      same
     }
-    // final degrees over W = edges with both endpoints alive; nodes
-    // whose every edge died emit no row, as in the edge-space peel
-    aliveDeg(alive)
+    // the first peel (every node alive) is the loop's initial state;
+    // final degrees are over W = edges with both endpoints alive, and
+    // nodes whose every edge died emit no row, as in the edge-space peel
+    Iterate.probe(peel(None), rounds - 1, sameCount)((alive, _) => peel(Some(alive)))(
+      run => aliveDeg(Some(run.state)))._1
   }
 
   /** Multi-source BFS to a fixed depth: dist(v) = min #hops from any
     * seed node, for every v within `maxHops` (the reachability /
     * blast-radius walk — "what else is within k links of these flagged
     * docs"). Same node-space discipline as kCore: the symmetric edge
-    * list is checkpointed ONCE; each round is one broadcast
-    * frontier-probe over it (map-side semi-join shape), a distinct,
-    * and an anti-join against the labeled set — only node-sized state
-    * is ever re-materialized, and superseded checkpoints are freed
-    * eagerly (the last labeled table is the returned result; Bench's
-    * between-queries sweep reclaims it like every session memo). On a
-    * graph whose frontier outgrows a broadcast, swap both probes to
-    * shuffle_hash semi-joins — the loop is unchanged.
+    * list is checkpointed ONCE and the state is one node-sized (id,
+    * dist) table. Hop h's frontier is the rows at dist h-1: one
+    * broadcast frontier-probe over the edge list (map-side semi-join
+    * shape), a distinct, and a broadcast anti-join against the labeled
+    * set, unioned onto it — one cut per hop under [[Iterate.probe]].
+    * The returned frame is the last hop's cut. On a graph whose frontier
+    * outgrows a broadcast, swap both probes to shuffle_hash semi-joins —
+    * the loop is unchanged. Self-loops are dropped.
     */
   def bfsHops(pairs: DataFrame, srcCol: String, dstCol: String,
       seedPred: Column, maxHops: Int,
       prebuiltSym: Option[DataFrame] = None): DataFrame = {
-    val sym = prebuiltSym.getOrElse {
-      val edges = pairs
-        .select(least(col(srcCol), col(dstCol)).as("a"), greatest(col(srcCol), col(dstCol)).as("b"))
-        .filter(col("a") =!= col("b"))
-        .distinct()
-      edges.select(col("a").as("src"), col("b").as("dst"))
-        .union(edges.select(col("b").as("src"), col("a").as("dst")))
-        .localCheckpoint(true)
-    }
-    var labeled = sym.select(col("src").as("id")).distinct()
+    val sym = prebuiltSym.getOrElse(symEdges(pairs, srcCol, dstCol))
+    val seeds = sym.select(col("src").as("id")).distinct()
       .filter(seedPred)
       .withColumn("dist", lit(0L))
-      .localCheckpoint(true)
-    var frontier = labeled
-    var h = 1
-    while (h <= maxHops) {
-      val next = sym
-        .join(broadcast(frontier.select(col("id").as("src"))), Seq("src"), "left_semi")
+    Iterate.probe(seeds, maxHops) { (labeled, hop) =>
+      val h = hop.index
+      labeled.unionByName(sym
+        .join(broadcast(labeled.filter(col("dist") === h - 1).select(col("id").as("src"))),
+          Seq("src"), "left_semi")
         .select(col("dst").as("id")).distinct()
         .join(broadcast(labeled.select(col("id"))), Seq("id"), "left_anti")
-        .withColumn("dist", lit(h.toLong))
-        .localCheckpoint(true)
-      val grown = labeled.unionByName(next).localCheckpoint(true)
-      if (frontier ne labeled) org.apache.spark.sql.GraftBridge.freeLocalCheckpoint(frontier)
-      org.apache.spark.sql.GraftBridge.freeLocalCheckpoint(labeled)
-      labeled = grown
-      frontier = next
-      h += 1
-    }
-    if (frontier ne labeled) org.apache.spark.sql.GraftBridge.freeLocalCheckpoint(frontier)
-    labeled
+        .withColumn("dist", lit(h.toLong)))
+    }(_.state)._1
   }
 
   /** Synchronous majority-label propagation (Raghavan, Albert & Kumara
@@ -650,7 +565,8 @@ object Relational {
     * simultaneously from the previous round's labels (no update-order
     * dependence), ties break to the SMALLEST label, label₀(v) = v.
     * Fixed round count like pageRank (no data-dependent fixpoint), so
-    * any engine replays it bit-for-bit.
+    * any engine replays it bit-for-bit. Self-loops are dropped: a node
+    * whose only edge is a self-loop gets no row.
     *
     * Scale shape: one checkpointed symmetric edge list; each round is
     * one src-keyed join + one (dst, label) partial aggregate + one
@@ -659,12 +575,10 @@ object Relational {
     * of rank-windowing the vote frame (counts are non-negative, so the
     * negation can never overflow, and the label itself is compared
     * un-negated — any orderable id type works, string ids included).
-    * State is one label per node, under the pageRank checkpoint
-    * discipline: every 4th round's label frame is eagerly
-    * localCheckpointed and the superseded cut freed, so the plan stays
-    * bounded at ANY `iters` instead of nesting every prior round's
-    * join (at the default iters=3 no cut fires and the plan is
-    * byte-identical to the un-checkpointed loop).
+    * State is one label per node, cut like pageRank's by
+    * [[Iterate.walk]], so the plan stays bounded at ANY `iters` instead
+    * of nesting every prior round's join (at the default iters=3 no cut
+    * fires and the plan is the un-checkpointed loop).
     */
   def labelPropagation(pairs: DataFrame, srcCol: String, dstCol: String,
       iters: Int = 3): DataFrame =
@@ -677,21 +591,13 @@ object Relational {
     */
   def labelPropagationWithEdges(pairs: DataFrame, srcCol: String, dstCol: String,
       iters: Int = 3, prebuiltEdges: Option[DataFrame] = None): (DataFrame, DataFrame) = {
-    // prebuiltEdges: the caller's already-checkpointed symmetric-
-    // distinct edge list partitioned by src (see [[triangleCounts]]
-    // for the shared-state contract); it is returned as this
-    // function's edge component unchanged
-    val edges = prebuiltEdges.getOrElse(
-      pairs.select(col(srcCol).as("src"), col(dstCol).as("dst"))
-        .union(pairs.select(col(dstCol).as("src"), col(srcCol).as("dst")))
-        .distinct()
-        .repartition(col("src"))
-        .localCheckpoint(true))
-    var lab = edges.select(col("src").as("id")).distinct()
+    // prebuiltEdges: the caller's already-checkpointed [[symEdges]]
+    // list (see [[triangleCounts]] for the shared-state contract); it
+    // is returned as this function's edge component unchanged
+    val edges = prebuiltEdges.getOrElse(symEdges(pairs, srcCol, dstCol))
+    val lab0 = edges.select(col("src").as("id")).distinct()
       .select(col("id"), col("id").as("lab"))
-    var lastCut: DataFrame = null // the live lineage-truncation checkpoint
-    var it = 0
-    while (it < iters) {
+    val lab = Iterate.walk(lab0, iters) { lab =>
       val votes = edges
         .join(lab.select(col("id").as("__src"), col("lab")), col("src") === col("__src"))
         .groupBy(col("dst").as("id"), col("lab"))
@@ -701,31 +607,29 @@ object Relational {
       // and order-safe for ANY label type (the count is what gets
       // negated, never the label, so string ids and Long.MinValue ids
       // order correctly)
-      lab = votes
+      votes
         .groupBy("id")
         .agg(min(struct((-col("__cnt")).as("__nc"), col("lab"))).as("__m"))
         .select(col("id"), col("__m.lab").as("lab"))
-      // LPA rounds are heavier than pageRank's (join + TWO aggregates),
-      // so the lineage cut fires every 4 rounds; the fresh eager cut
-      // supersedes the previous one, whose blocks are freed immediately
-      if (it % 4 == 3 && it != iters - 1) {
-        lab = lab.localCheckpoint(true)
-        if (lastCut != null) org.apache.spark.sql.GraftBridge.freeLocalCheckpoint(lastCut)
-        lastCut = lab
-      }
-      it += 1
-    }
-    // Release path for the FINAL surviving cut (ADVICE r15): at
-    // iters ≥ 8 the last lineage cut's blocks were held for the whole
-    // session for callers outside the lpaState memo (clearSessionMemos
-    // frees only the memoized frames, not this loop-internal one).
-    // Checkpoint the final labels eagerly and free the cut they derive
-    // from — the same supersede-and-free the loop does. At the default
-    // iters = 3 no cut ever fires and this is a no-op (plan unchanged).
-    if (lastCut != null) {
-      lab = lab.localCheckpoint(true)
-      org.apache.spark.sql.GraftBridge.freeLocalCheckpoint(lastCut)
     }
     (lab.select(col("id"), col("lab").as("community")), edges)
+  }
+
+  /** The symmetric edge list the graph loops walk, as (src, dst):
+    * each pair made canonical, self-loops dropped, duplicates removed,
+    * both directions unioned, repartitioned by src and checkpointed.
+    * `Queries.graphSym` builds the same contract from pairs that are
+    * canonical by construction; either can be passed as an operator's
+    * prebuilt state.
+    */
+  def symEdges(pairs: DataFrame, srcCol: String, dstCol: String): DataFrame = {
+    val e = pairs
+      .select(least(col(srcCol), col(dstCol)).as("a"), greatest(col(srcCol), col(dstCol)).as("b"))
+      .filter(col("a") =!= col("b"))
+      .distinct()
+    e.select(col("a").as("src"), col("b").as("dst"))
+      .union(e.select(col("b").as("src"), col("a").as("dst")))
+      .repartition(col("src"))
+      .localCheckpoint(true)
   }
 }

@@ -68,10 +68,6 @@ object Sources {
   def parquetStream(spark: SparkSession, path: String, schemaFrom: DataFrame): DataFrame =
     spark.readStream.schema(schemaFrom.schema).parquet(path)
 
-  /** Synthetic benchmark stream: monotonically increasing (timestamp, value). */
-  def rateStream(spark: SparkSession, rowsPerSecond: Int): DataFrame =
-    spark.readStream.format("rate").option("rowsPerSecond", rowsPerSecond.toString).load()
-
   // ---- kafka -------------------------------------------------------------
   //
   // The reference is Kafka-native: its sources are samsa consumers

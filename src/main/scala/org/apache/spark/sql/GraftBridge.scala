@@ -73,8 +73,9 @@ object GraftBridge {
     * lineage cuts) piles up in the block manager and squeezes execution
     * memory for every later job. Call this on a checkpointed frame once
     * nothing will read it again; the next checkpoint in the loop must
-    * already be materialized (eager=true does that). Non-checkpoint
-    * plans are a no-op.
+    * already be materialized (eager=true does that). A frame built over
+    * checkpoints frees every one its plan reads; a plan reading none is
+    * a no-op.
     */
   def freeLocalCheckpoint(df: Dataset[_]): Unit =
     df.queryExecution.logical.foreach {
@@ -83,6 +84,10 @@ object GraftBridge {
         lr.rdd.unpersist(blocking = false)
       case _ => ()
     }
+
+  /** The ids of the checkpoint RDDs `df`'s plan reads. */
+  def checkpointRddIds(df: Dataset[_]): Set[Int] =
+    df.queryExecution.logical.collect { case lr: execution.LogicalRDD => lr.rdd.id }.toSet
 
   /** A frame over `f` applied to `df`'s analyzed plan, in `df`'s
     * session — how a custom logical node (graft.functions.GraftFence)

@@ -109,6 +109,30 @@ class DriverContractSpec extends AnyFunSuite {
       s"session-keyed memo maps outside SessionMemo: ${hits.filterNot(_ == "SessionMemo.scala")}")
   }
 
+  test("one loop owner: freeLocalCheckpoint is called only in SessionMemo.scala and operators/Iterate.scala") {
+    // a loop that frees its own cuts escapes Iterate's release contract
+    // (the hand-kept lastCut/prev release code it replaced); the memo
+    // registry frees the frames its entries pin
+    implicit val codec: scala.io.Codec = scala.io.Codec.UTF8
+    val sep = java.io.File.separator
+    val owners = Seq(s"graft${sep}SessionMemo.scala", s"graft${sep}operators${sep}Iterate.scala")
+    val call = "\\bfreeLocalCheckpoint\\b".r
+    val hits = sourceFiles.filter(_.getPath.startsWith(s"src${sep}main"))
+      .flatMap { f =>
+        val src = scala.io.Source.fromFile(f)
+        try src.getLines().zipWithIndex.collect {
+          case (line, i) if call.findFirstIn(line).isDefined &&
+              !line.contains("def freeLocalCheckpoint") &&
+              !line.trim.startsWith("//") && !line.trim.startsWith("*") =>
+            f.getPath -> s"${f.getPath}:${i + 1}: ${line.trim}"
+        }.toList finally src.close()
+      }
+    val stray = hits.filterNot(h => owners.exists(h._1.endsWith)).map(_._2)
+    assert(stray.isEmpty, s"freeLocalCheckpoint outside its owners:\n${stray.mkString("\n")}")
+    assert(owners.forall(o => hits.exists(_._1.endsWith(o))),
+      s"the scan no longer recognizes the owners' own calls: ${hits.map(_._2)}")
+  }
+
   test("no partition-seeded randomness: no rand(/randn( or spark_partition_id in src/main") {
     // their values depend on how rows fall into partitions, so a result
     // built on them changes with the partition count

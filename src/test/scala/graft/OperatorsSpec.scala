@@ -388,6 +388,91 @@ class OperatorsSpec extends SparkSpecBase {
     assert(core3Long == core3)
   }
 
+  test("graph loops: their own edge build answers as prebuilt symEdges state on self-loops, duplicates and reversed pairs") {
+    import spark.implicits._
+    // triangle 1-2-3 given twice over ((1,2) duplicated, (2,1) and
+    // (3,1) reversed), a self-loop on 3, a tail 3-4-5 and a node 9
+    // whose only edge is a self-loop
+    val pairs = Seq((1L, 2L), (1L, 2L), (2L, 1L), (2L, 3L), (3L, 1L), (3L, 3L),
+      (3L, 4L), (4L, 5L), (9L, 9L)).toDF("id_a", "id_b")
+    val sym = Relational.symEdges(pairs, "id_a", "id_b")
+    val deg = sym.groupBy(col("src").as("id")).agg(count(lit(1)).as("deg"))
+    val seed = col("id") % 2 === 1
+    def rows(df: org.apache.spark.sql.DataFrame): Map[Long, Long] =
+      df.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    val cases = Seq(
+      "pageRank" -> (Relational.pageRank(pairs, "id_a", "id_b", 3),
+        Relational.pageRank(pairs, "id_a", "id_b", 3, Some((sym, deg)))),
+      "personalizedPageRank" -> (Relational.personalizedPageRank(pairs, "id_a", "id_b", seed, 3),
+        Relational.personalizedPageRank(pairs, "id_a", "id_b", seed, 3, Some((sym, deg)))),
+      "labelPropagation" -> (Relational.labelPropagation(pairs, "id_a", "id_b", 3),
+        Relational.labelPropagationWithEdges(pairs, "id_a", "id_b", 3, Some(sym))._1),
+      "kCore" -> (Relational.kCore(pairs, "id_a", "id_b", k = 2),
+        Relational.kCore(pairs, "id_a", "id_b", k = 2, prebuiltSym = Some(sym))),
+      "bfsHops" -> (Relational.bfsHops(pairs, "id_a", "id_b", col("id") === 1L, maxHops = 3),
+        Relational.bfsHops(pairs, "id_a", "id_b", col("id") === 1L, maxHops = 3, Some(sym))))
+    for ((name, (own, prebuilt)) <- cases) {
+      val got = rows(own)
+      assert(got == rows(prebuilt), s"$name: own edge build disagrees with prebuilt state")
+      assert(got.nonEmpty && !got.contains(9L), s"$name: self-loop-only node 9 got a row: $got")
+    }
+    assert(sym.filter(col("src") === col("dst")).isEmpty)
+    assert(sym.count() == 10L) // 5 undirected edges, both directions
+  }
+
+  test("pageRank and personalizedPageRank plans stay flat past the cut cadence (iters=12 no deeper than iters=4)") {
+    import spark.implicits._
+    val pairs = Seq((1L, 2L), (2L, 3L), (3L, 4L), (4L, 1L)).toDF("id_a", "id_b")
+    val walks = Seq[(String, Int => org.apache.spark.sql.DataFrame)](
+      "pageRank" -> (i => Relational.pageRank(pairs, "id_a", "id_b", i)),
+      "personalizedPageRank" ->
+        (i => Relational.personalizedPageRank(pairs, "id_a", "id_b", col("id") === 1L, i)))
+    for ((name, walk) <- walks) {
+      def planDepth(iters: Int): Int =
+        walk(iters).queryExecution.optimizedPlan.collect { case p => p }.size
+      val d4 = planDepth(4)
+      val d12 = planDepth(12)
+      assert(d12 <= d4 + 2,
+        s"$name: iters=12 plan ($d12 nodes) nests rounds the cut should have truncated (iters=4: $d4)")
+    }
+  }
+
+  test("driven loops leave persisted only the checkpoints their returned frame reads") {
+    import spark.implicits._
+    import org.apache.spark.sql.GraftBridge
+    def persistentIds: Set[Int] = spark.sparkContext.getPersistentRDDs.keySet.toSet
+    val ids = (0 until 128).map(i => ((i * 53) % 128) + 1L)
+    val chain = ids.zip(ids.tail).toDF("id_a", "id_b")
+    // prebuilt state is the caller's, made before any snapshot below
+    val sym = Relational.symEdges(chain, "id_a", "id_b")
+    val deg = sym.groupBy(col("src").as("id")).agg(count(lit(1)).as("deg")).localCheckpoint(true)
+    val emb = spark.read.parquet(s"$sfDir/embeddings.parquet")
+    // each at a depth that fires cuts: walks past 2 × WalkCadence
+    // rounds, a 2-core peel that loses two chain ends per round
+    val runs = Seq[(String, () => org.apache.spark.sql.DataFrame)](
+      "connectedComponents" -> (() => Relational.connectedComponents(chain, "id_a", "id_b")),
+      "pageRank" -> (() => Relational.pageRank(chain, "id_a", "id_b", 12, Some((sym, deg)))),
+      "personalizedPageRank" -> (() => Relational.personalizedPageRank(chain, "id_a", "id_b",
+        col("id") % 5 === 0, 12, Some((sym, deg)))),
+      "labelPropagation" -> (() =>
+        Relational.labelPropagationWithEdges(chain, "id_a", "id_b", 12, Some(sym))._1),
+      "kCore" -> (() => Relational.kCore(chain, "id_a", "id_b", k = 2, rounds = 20,
+        prebuiltSym = Some(sym))),
+      "bfsHops" -> (() => Relational.bfsHops(chain, "id_a", "id_b", col("id") % 7 === 0,
+        maxHops = 5, Some(sym))),
+      "kmeansTrain2" -> (() => graft.functions.VectorFns.kmeansTrain2(emb, "vec_id", "embedding",
+        kCentroids = 16, rounds = 3, assignProbes = 1)))
+    for ((name, run) <- runs) {
+      val before = persistentIds
+      val out = run()
+      val gained = persistentIds -- before
+      val read = GraftBridge.checkpointRddIds(out)
+      assert(gained.nonEmpty, s"$name: no checkpoint behind its result")
+      assert(gained.subsetOf(read), s"$name: left checkpoints its result never reads: ${gained -- read}")
+      assert(out.count() > 0L, s"$name: empty result")
+    }
+  }
+
   test("Width.computeDense pins compute-dense shuffles at 3 × defaultParallelism") {
     val w = graft.functions.Width.computeDense(spark)
     assert(w == 3 * spark.sparkContext.defaultParallelism)

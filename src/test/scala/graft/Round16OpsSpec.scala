@@ -17,7 +17,7 @@ import graft.operators.{Joins, Relational}
   *    corpus — the new row-loss guard passes on complete geometry
   *    (ADVICE row-loss);
   *  - labelPropagation at checkpoint-cadence iters matches a
-  *    plain-Scala reference (the final-cut release is value-neutral —
+  *    plain-Scala reference (the lineage cuts are value-neutral —
   *    ADVICE final-cut);
   *  - multimodal perceptual-hash near-dup: the whole operator vs a
   *    plain-Scala brute force (signatures AND the exact pair set), plus
@@ -160,13 +160,13 @@ class Round16OpsSpec extends SparkSpecBase {
     }
   }
 
-  // ---- LPA final-cut release is value-neutral (ADVICE) --------------------
+  // ---- LPA lineage cuts are value-neutral (ADVICE) -------------------------
 
   test("labelPropagation at checkpoint-cadence iters matches a plain-Scala reference") {
     import spark.implicits._
     // path 1..12 + 4-clique 20..23 bridged at 12-20, plus an isolated
-    // dumbbell 30-31: enough rounds that the it%4 lineage cuts fire
-    // (iters = 9 → cuts at it = 3 and 7, final release path exercised)
+    // dumbbell 30-31: enough rounds that Iterate.walk's lineage cuts
+    // fire (iters = 9 → cuts after rounds 4 and 8)
     val pairs: Seq[(Long, Long)] =
       (1L to 11L).map(i => (i, i + 1)) ++
         Seq((20L, 21L), (20L, 22L), (20L, 23L), (21L, 22L), (21L, 23L), (22L, 23L),
